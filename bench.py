@@ -68,7 +68,7 @@ class LoadGate:
 
 
 def bench_crawl(spark, sf_dir: str, max_depth: int = 6) -> tuple[float, int]:
-    """The engine loop itself: BFS to depth 6 with bloom seen-set +
+    """The engine loop itself: BFS to depth 6 with the seen-set filter +
     politeness budgets on. Returns (seconds, pages_crawled). This
     measures ROUND LATENCY (7 mostly-small rounds), not throughput."""
     from crawl4ai_spark.corpus.webgen import build_corpus, seed_url
@@ -81,7 +81,7 @@ def bench_crawl(spark, sf_dir: str, max_depth: int = 6) -> tuple[float, int]:
     wh = Warehouse(tempfile.mkdtemp(prefix="c4as_bench_"))
     eng = CrawlEngine(
         spark, wh, CorpusFetcher(corpus),
-        CrawlConfig(max_depth=max_depth, mode="bfs", use_bloom=True,
+        CrawlConfig(max_depth=max_depth, mode="bfs",
                     base_host_budget=4000, n_salts=8),
     )
     t0 = time.monotonic()
@@ -117,7 +117,7 @@ def bench_crawl_mass(spark, sf_dir: str, replicas: int = 4) -> tuple[float, int]
     wh = Warehouse(tempfile.mkdtemp(prefix="c4as_mass_"))
     eng = CrawlEngine(
         spark, wh, CorpusFetcher(corpus),
-        CrawlConfig(max_depth=0, mode="bfs", use_bloom=True,
+        CrawlConfig(max_depth=0, mode="bfs",
                     base_host_budget=n // 7 + 1, n_salts=8, max_rounds=1),
     )
     t0 = time.monotonic()

@@ -11,7 +11,7 @@ Layout:
     functions/   URL canonicalization, scorers, filters (column expressions
                  + vectorized pandas UDFs — never per-row Python UDFs)
     extraction/  HTML -> (cleaned text, links, media, spans) via mapInPandas
-    engine/      frontier loop, politeness, robots, bloom seen-set shards,
+    engine/      frontier loop, politeness, robots, cuckoo seen-set shards,
                  checkpoint/resume
     corpus/      deterministic synthetic web corpora (FakeShop-style) and
                  hash-derived link graphs over the driver test tables

@@ -1,16 +1,15 @@
-"""Partitioned cuckoo-filter URL-seen shards — the deletion-capable
-twin of :mod:`crawl4ai_spark.engine.bloom` (north-star rule:
+"""Partitioned cuckoo-filter URL-seen shards: the crawl engine's
+pre-filter for the exact seen-set anti-join (north-star rule:
 "bloom/cuckoo URL-seen").
 
 A cuckoo filter (Fan et al. 2014, "Cuckoo Filter: Practically Better
 Than Bloom") stores 16-bit fingerprints in m buckets x 4 slots; key x
 may live in bucket i1 = h(x) mod m or i2 = i1 XOR (h'(fp) mod m), so
 membership, insertion and DELETION are all two-bucket operations.
-Deletion is what the bloom cannot do — it is what a recrawl scheduler
-needs (a URL leaves the seen set when its TTL expires) and what cache
-eviction needs, without rebuilding the filter.
+Deletion is what seen-TTL recrawl scheduling needs (a URL leaves the
+seen set when its TTL expires) without rebuilding the filter.
 
-Same scale posture as the bloom shards, same storage contract:
+Scale posture and storage contract:
   - shard_id = pmod(xxhash64(url_norm), n_shards); shards are BINARY
     blobs in a snapshot table, cogrouped executor-side — blobs never
     visit the driver, only 8-byte hashes shuffle.
@@ -20,19 +19,16 @@ Same scale posture as the bloom shards, same storage contract:
     of kicks); a failed fingerprint goes to the shard's exact OVERFLOW
     STASH (an int64 hash array probed alongside the table), so a full
     filter degrades to exact-check cost, never to a false negative.
-  - sizing from state: buckets = next_pow2(expected / (4 * 0.95));
-    the engine rebuilds at a round boundary when outgrown, exactly the
-    bloom's schedule.
+  - sizing from state: buckets per shard = next_pow2(expected *
+    headroom / n_shards / (4 * 0.95)); the engine rebuilds at a round
+    boundary when the seen count outgrows capacity().
 
-Honest cost note: insertion is a placement problem the bloom doesn't
-have. The fast path is vectorized (per pass, the first remaining key
-targeting each bucket places conflict-free; full-bucket keys escalate
-to their alt bucket) and only keys with BOTH buckets full run the
-per-key eviction chain — measured 465k inserts/s single-thread at 76%
-load vs the bloom's pure OR at several millions/s (BENCH.md, cuckoo
-stress). The bloom remains the default crawl-loop pre-filter; choose
-the cuckoo (CrawlConfig seen_filter="cuckoo") when deletion semantics
-(seen-TTL recrawl, cache eviction) are worth that constant.
+Insertion is a placement problem. The fast path is vectorized (per
+pass, the first remaining key targeting each bucket places
+conflict-free; full-bucket keys escalate to their alt bucket) and only
+keys with BOTH buckets full run the per-key eviction chain, so at the
+crawl loop's loads throughput is numpy-bound (BENCH.md, seen-set
+stress).
 
 Determinism: fingerprints, bucket choices, victim slots and kick
 sequences are all pure functions of the key hash and the insertion
@@ -61,6 +57,9 @@ SHARD_SCHEMA = T.StructType(
 SLOTS = 4
 MAX_KICKS = 500
 TARGET_LOAD = 0.95
+# growth headroom on (re)build: room for 4x the expected keys, so the
+# engine's capacity rebuild runs rarely
+HEADROOM = 4.0
 _FP_MUL = np.uint64(0x5BD1E995)  # partial-key hash for the i2 offset
 
 
@@ -277,28 +276,13 @@ def delete_keys(table: np.ndarray, hashes: np.ndarray, m: int) -> int:
 
 class CuckooSeenSet:
     """Sharded cuckoo-filter state over a SnapshotTable of
-    (shard_id, table, stash, m_buckets, n_items). API-compatible with
-    BloomSeenSet (build / add_hashes / probe / capacity / shard_col)
-    plus delete_hashes."""
+    (shard_id, table, stash, m_buckets, n_items): build / add_hashes /
+    delete_hashes / probe, plus capacity() for the rebuild check."""
 
     def __init__(self, table, n_shards: int = 32, m_buckets: int = 1 << 14):
         self.table = table  # SnapshotTable
         self.n_shards = n_shards
-        self.m_buckets = m_buckets
-
-    # BloomSeenSet API parity: the engine checkpoints/restores m_bits;
-    # for the cuckoo it is a pure view over m_buckets (4 slots x 16 bits)
-    @property
-    def m_bits(self) -> int:
-        return self.m_buckets * SLOTS * 16
-
-    @m_bits.setter
-    def m_bits(self, v: int) -> None:
-        # round UP to a power of two: the i1^offset involution requires
-        # pow2 bucket counts, and a checkpoint written by a bloom run
-        # (any m is legal there) may restore an arbitrary value here
-        b = max(1, int(v) // (SLOTS * 16))
-        self.m_buckets = 1 << (b - 1).bit_length()
+        self.m_buckets = m_buckets  # per-shard size; reset by build()
 
     def shard_col(self, hash_col):
         return F.pmod(hash_col, F.lit(self.n_shards)).cast("int")
@@ -327,7 +311,7 @@ class CuckooSeenSet:
 
     # -- build: (re)create every shard, sized from state --------------------
     def build(self, spark: SparkSession, hashes_df: DataFrame,
-              expected_n: int, headroom: float = 4.0) -> None:
+              expected_n: int, headroom: float = HEADROOM) -> None:
         self.m_buckets = size_buckets(int(expected_n * headroom), self.n_shards)
         m = self.m_buckets
 
@@ -358,7 +342,7 @@ class CuckooSeenSet:
             F.col("url_hash"),
         )
         # size any MISSING shard from the stored sibling shards, not the
-        # driver-side mirror: an m_bits restore may have rounded up past
+        # driver-side mirror: a restored m_buckets may disagree with
         # what the shards were built with, and non-uniform m breaks the
         # capacity() math and the involution (ADVICE r4)
         mm = prev.agg(F.min("m_buckets").alias("lo"),

@@ -27,8 +27,8 @@ bff_strategy.py:129-213):
 
 Everything else is driver-side bookkeeping: metrics rows are written
 with pyarrow (no job), and the round manifest commit is a JSON rename.
-The bloom seen-set is maintained on an amortized schedule (see below),
-adding ~1/bloom_sync_rounds of a job per round.
+The seen-set pre-filter is maintained on an amortized schedule (see
+below), adding ~1/bloom_sync_rounds of a job per round.
 
 Determinism contract (SURVEY §2.2): per-depth crawled sets equal the
 reference's; ties broken by (priority, depth, url_norm); first-discovery
@@ -36,16 +36,16 @@ parent refined to min(parent_url) among same-round discoverers.
 
 Scale posture: frontier and seen are hash-distributed on xxhash64(url);
 politeness windows are salted two-stage to survive hub-host skew; the
-seen-set anti-join is bloom-pre-filtered so only (dups + FP) rows
-shuffle; the bloom itself is updated every `bloom_sync_rounds` rounds
-(an exact anti-join against the small recent-rounds seen DELTA covers
-the gap, so exact-set semantics hold at every round), sized from the
-live seen count, and rebuilt at a round boundary when outgrown;
-robots/host budgets broadcast; AQE handles residual skew. The
-pre-filter backend is pluggable (seen_filter="bloom"|"cuckoo",
-engine/cuckoo.py — deletion-capable for seen_ttl_rounds recrawl
-scheduling, whose expiry is a metadata-only dir drop on the
-round-partitioned seen table).
+seen-set anti-join is pre-filtered by a partitioned cuckoo filter
+(engine/cuckoo.py) so only (dups + FP) rows shuffle; the filter is
+updated every `bloom_sync_rounds` rounds (an exact anti-join against
+the small recent-rounds seen DELTA covers the gap, so exact-set
+semantics hold at every round), sized from the live seen count, and
+rebuilt at a round boundary when outgrown; robots/host budgets
+broadcast; AQE handles residual skew. The cuckoo can delete, which
+seen_ttl_rounds recrawl scheduling needs: expiry drops round dirs from
+the round-partitioned seen table (metadata only) and deletes their
+hashes from the filter shards.
 """
 
 from __future__ import annotations
@@ -58,7 +58,7 @@ from typing import Callable, Optional
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from crawl4ai_spark.engine.bloom import BloomSeenSet
+from crawl4ai_spark.engine.cuckoo import CuckooSeenSet
 from crawl4ai_spark.engine.politeness import (
     RATE_LIMIT_CODES,
     select_fetch_batch,
@@ -84,25 +84,18 @@ class CrawlConfig:
     max_retries: int = 3                     # async_dispatcher.py:33
     fairness_rounds: int = 5
     n_salts: int = 8
-    # seen set
-    use_bloom: bool = True
-    # pre-filter backend: "bloom" (default — pure vectorized, no
-    # deletion) or "cuckoo" (engine/cuckoo.py — deletion-capable for
-    # TTL/recrawl semantics; insertion is a per-key chain, see module
-    # docstring). Both are exact-set-preserving pre-filters: probe
-    # false positives fall through to the exact anti-join, and neither
-    # can produce a false negative.
-    seen_filter: str = "bloom"
+    # seen set: an exact anti-join, pre-filtered by sharded cuckoo
+    # filters (engine/cuckoo.py). Probe false positives fall through to
+    # the exact anti-join and the filter has no false negatives, so the
+    # crawled set never depends on it.
     n_shards: int = 32
-    bloom_m_bits: int = 1 << 20              # initial/floor per-shard size
-    bloom_k: int = 7
-    # bloom engages only once the exact seen set crosses this size (it
-    # is a PRE-filter for a big anti-join; below this the anti-join is
-    # already cheap and shard maintenance would be pure overhead). On
-    # crossing, shards are bulk-built from the seen table once, sized
-    # from the live count. Tests set 0 to exercise bloom from round 0.
+    # the filter engages only once the exact seen set crosses this size
+    # (it is a PRE-filter for a big anti-join; below this the anti-join
+    # is already cheap and shard maintenance would be pure overhead).
+    # On crossing, shards are bulk-built from the seen table once, sized
+    # from the live count. Tests set 0 to engage it from round 0.
     bloom_min_seen: int = 50_000
-    # bloom shards are synced every K rounds; between syncs an exact
+    # filter shards are synced every K rounds; between syncs an exact
     # anti-join against the (small) seen delta of unsynced rounds keeps
     # dedup exact while amortizing the shard-write job to 1/K per round
     bloom_sync_rounds: int = 8
@@ -110,12 +103,9 @@ class CrawlConfig:
     # this many rounds ago EXPIRE at the round close — an expired URL
     # that is rediscovered is crawled again. Expiry is a metadata-only
     # dir drop on the round-partitioned seen table (Iceberg DeleteFiles
-    # shape — no rewrite job); with seen_filter="cuckoo" the expired
-    # hashes are also DELETED from the filter shards (the capability
-    # the bloom lacks — its stale entries cost only pre-filter FPs
-    # until its next rebuild, never correctness).
+    # shape — no rewrite job), and the expired hashes are DELETED from
+    # the filter shards.
     seen_ttl_rounds: Optional[int] = None
-    bloom_headroom: float = 4.0              # growth headroom on (re)build
     # capacity cap: below this `remaining`, exact global top-k
     # (TakeOrdered); above it, an approx-quantile score cut — an exact
     # remaining-sized heap per task is a scale hazard at 10^7+ remaining
@@ -188,7 +178,7 @@ FRONTIER_FIELDS = [
 # hit parquet schema-merge ambiguity. Parquet column pruning makes the
 # unused columns free on each read path.
 STATE_FIELDS = FRONTIER_FIELDS + [
-    ("round", "int"),        # seen: enqueue round (bloom delta granularity)
+    ("round", "int"),        # seen: enqueue round (filter delta granularity)
     ("budget", "int"),       # host_state
     ("fail_count", "int"),   # host_state
 ]
@@ -244,19 +234,10 @@ class CrawlEngine:
         self.t_pages = warehouse.table("pages")
         self.t_host = warehouse.table("host_state")
         self.t_metrics = warehouse.table("metrics")
-        self.t_bloom = warehouse.table("seen_bloom")
-        if self.cfg.seen_filter == "cuckoo":
-            from crawl4ai_spark.engine.cuckoo import CuckooSeenSet
-
-            # same duck-typed surface (build/add_hashes/probe/capacity/
-            # m_bits); the blob schema differs, hence its own table
-            self.t_bloom = warehouse.table("seen_cuckoo")
-            self.bloom = CuckooSeenSet(self.t_bloom, self.cfg.n_shards)
-        else:
-            self.bloom = BloomSeenSet(
-                self.t_bloom, self.cfg.n_shards, self.cfg.bloom_m_bits,
-                self.cfg.bloom_k
-            )
+        # the seen-set pre-filter; its table is named for the blob
+        # schema, so a table of another layout is never read as this one
+        self.t_bloom = warehouse.table("seen_cuckoo")
+        self.bloom = CuckooSeenSet(self.t_bloom, self.cfg.n_shards)
         from crawl4ai_spark.engine.adaptive_state import AdaptiveState
 
         self.adaptive_state = AdaptiveState(warehouse)
@@ -398,18 +379,20 @@ class CrawlEngine:
         self._seen_count = last.get("seen_count", 0)
         self._bloom_built = last.get("bloom_built", False)
         self._bloom_synced_round = last.get("bloom_synced_round", -1)
-        if self._bloom_built and not self.t_bloom.exists():
-            # checkpoint written under the OTHER filter backend (bloom
-            # vs cuckoo keep separate tables): trusting bloom_built
-            # against an empty table would mark every candidate
-            # definitely-new and bypass the exact anti-join for synced
-            # rounds — a mass re-crawl. Fall back to exact-only dedup;
-            # the filter rebuilds at its engage threshold.
+        if self._bloom_built and (not self.t_bloom.exists()
+                                  or not last.get("bloom_m_buckets")):
+            # filter table absent or size unrecorded: an absent table
+            # would mark every candidate definitely-new and bypass the
+            # exact anti-join for synced rounds — a mass re-crawl — and
+            # without its size capacity() is wrong. Fall back to
+            # exact-only dedup and empty the stale table; the filter
+            # rebuilds at its engage threshold.
             self._bloom_built = False
             self._bloom_synced_round = -1
+            last["tables"]["seen_bloom"] = []
         self._frontier_count = last.get("frontier_count")
-        if last.get("bloom_m_bits"):
-            self.bloom.m_bits = last["bloom_m_bits"]
+        if self._bloom_built:
+            self.bloom.m_buckets = last["bloom_m_buckets"]
         self._adaptive_last_round = last.get("adaptive_last_round", -1)
         for name, tbl in [
             ("frontier", self.t_frontier), ("seen", self.t_seen),
@@ -781,7 +764,7 @@ class CrawlEngine:
                 if _round_of_dir(d) is not None and _round_of_dir(d) <= cutoff
             ]
             if expired_rel:
-                if self._bloom_built and hasattr(self.bloom, "delete_hashes"):
+                if self._bloom_built:
                     # delete ONLY rounds the amortized sync has actually
                     # inserted (round <= _bloom_synced_round). Hashes
                     # from unsynced expired rounds were never added —
@@ -801,11 +784,11 @@ class CrawlEngine:
                 self.t_seen.drop_dirs(expired_rel)
         _tr("seen_ttl")
 
-        # -- bloom maintenance (amortized; exactness never depends on it) --
+        # -- filter maintenance (amortized; exactness never depends on it)
         # The post-adoption seen read only happens on rounds that will
         # actually build/sync — a read costs real driver time (listing +
         # plan), and most rounds need none.
-        if cfg.use_bloom and (
+        if (
             (not self._bloom_built and self._seen_count >= cfg.bloom_min_seen)
             or (self._bloom_built
                 and rnd - self._bloom_synced_round >= cfg.bloom_sync_rounds)
@@ -816,7 +799,6 @@ class CrawlEngine:
                     self.bloom.build(
                         self.spark, seen_now.select("url_hash"),
                         expected_n=max(1, self._seen_count),
-                        headroom=cfg.bloom_headroom,
                     )
                 self._bloom_built = True
                 self._bloom_synced_round = rnd
@@ -825,7 +807,7 @@ class CrawlEngine:
                     # outgrown: rebuild larger at the round boundary
                     self.bloom.build(
                         self.spark, seen_now.select("url_hash"),
-                        expected_n=self._seen_count, headroom=cfg.bloom_headroom,
+                        expected_n=self._seen_count,
                     )
                 elif seen_now is not None:
                     delta = seen_now.where(F.col("round") > self._bloom_synced_round)
@@ -853,7 +835,7 @@ class CrawlEngine:
                 "frontier_count": self._frontier_count,
                 "bloom_built": self._bloom_built,
                 "bloom_synced_round": self._bloom_synced_round,
-                "bloom_m_bits": self.bloom.m_bits,
+                "bloom_m_buckets": self.bloom.m_buckets,
                 "adaptive_last_round": self._adaptive_last_round,
                 "wall_s": time.monotonic() - t0,
                 "tables": {
@@ -985,14 +967,14 @@ class CrawlEngine:
         if cfg.score_threshold != float("-inf"):
             cands = cands.where(F.col("score") >= cfg.score_threshold)
 
-        # seen dedup. With the bloom engaged: "maybe seen" rows get the
+        # seen dedup. With the filter engaged: "maybe seen" rows get the
         # full exact anti-join; "definitely new" rows still anti-join the
-        # SMALL unsynced-rounds delta (bloom lags by <= bloom_sync_rounds
-        # rounds by design) — so dedup is exact every round while shard
-        # writes amortize.
+        # SMALL unsynced-rounds delta (the filter lags by <=
+        # bloom_sync_rounds rounds by design) — so dedup is exact every
+        # round while shard writes amortize.
         # (url_hash already computed in the dedup agg's select above)
         seen = self.t_seen.read(self.spark)
-        if cfg.use_bloom and self._bloom_built and seen is not None:
+        if self._bloom_built and seen is not None:
             probed = self.bloom.probe(self.spark, cands)
             fresh = probed.where(~F.col("maybe_seen")).drop("maybe_seen")
             maybe = probed.where(F.col("maybe_seen")).drop("maybe_seen")

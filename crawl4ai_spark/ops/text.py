@@ -14,7 +14,7 @@ Portability note: the 64-bit hash used throughout is
 bit-for-bit in any engine with md5 (DuckDB, Trino, ...), unlike
 engine-private hashes (xxhash64 seeds differ per engine). At scale the
 cost vs xxhash64 is irrelevant next to the shuffle; where parity does
-not matter (bloom seen-set) the engine uses native xxhash64.
+not matter (the seen-set filter) the engine uses native xxhash64.
 """
 
 from __future__ import annotations

@@ -17,7 +17,7 @@ Cross-engine determinism rules used throughout:
     doc_id, so crawl traversal has a recursive-CTE oracle.
 
 Queries without an oracle (engine loops that SQL can't express:
-best-first scheduling, bloom probing, multimodal feature stubs) are
+best-first scheduling, seen-filter probing, multimodal feature stubs) are
 registered with oracle=None -> the driver records a rows-only check.
 """
 
@@ -133,7 +133,7 @@ def crawl_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     wh = Warehouse(tempfile.mkdtemp(prefix="c4as_bfs_"))
     eng = CrawlEngine(
         spark, wh, CorpusFetcher(corpus),
-        CrawlConfig(max_depth=_CRAWL_BFS_DEPTH, mode="bfs", use_bloom=True),
+        CrawlConfig(max_depth=_CRAWL_BFS_DEPTH, mode="bfs"),
     )
     eng.run([seed_url()])
     pages = eng.t_pages.read(spark)
@@ -189,7 +189,7 @@ def crawl_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     wh = Warehouse(tempfile.mkdtemp(prefix="c4as_met_"))
     eng = CrawlEngine(
         spark, wh, CorpusFetcher(corpus),
-        CrawlConfig(max_depth=_CRAWL_BFS_DEPTH, mode="bfs", use_bloom=True),
+        CrawlConfig(max_depth=_CRAWL_BFS_DEPTH, mode="bfs"),
     )
     eng.run([seed_url()])
     m = eng.t_metrics.read(spark)
@@ -479,7 +479,7 @@ def crawl_bestfirst(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, wh, CorpusFetcher(corpus),
         CrawlConfig(
             max_depth=_BFF_DEPTH, mode="best_first", batch_size=_BFF_BATCH,
-            max_pages=_BFF_PAGES, scorer=_bff_scorer, use_bloom=True,
+            max_pages=_BFF_PAGES, scorer=_bff_scorer,
         ),
     )
     eng.run([seed_url()])
@@ -2891,7 +2891,7 @@ def crawl_contextual(spark: SparkSession, sf_dir: str) -> DataFrame:
     wh = Warehouse(tempfile.mkdtemp(prefix="c4as_ctx_"))
     eng = CrawlEngine(
         spark, wh, CorpusFetcher(corpus),
-        CrawlConfig(max_depth=_CTX_DEPTH, mode="bfs", use_bloom=True,
+        CrawlConfig(max_depth=_CTX_DEPTH, mode="bfs",
                     link_query=_CTX_TERMS),
     )
     eng.run([seed_url()])

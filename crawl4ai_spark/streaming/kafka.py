@@ -96,8 +96,10 @@ def kafka_messages(df: DataFrame, topic: str, key_col: str,
     key_expr = F.col(key_col)
     if isinstance(df.schema[key_col].dataType, BooleanType):
         # reference key bytes are str(k).encode() (producer.py:108):
-        # Python str(True) is 'True', Spark's cast is 'true'
-        key_expr = F.when(key_expr, "True").otherwise("False")
+        # Python str(True) is 'True', Spark's cast is 'true'. A NULL
+        # key stays NULL (no otherwise branch), so the row is dropped
+        # like any other null key.
+        key_expr = F.when(key_expr, "True").when(~key_expr, "False")
     msgs = df.select(
         F.lit(topic).alias("topic"),
         F.encode(key_expr.cast("string"), "UTF-8").alias("key"),

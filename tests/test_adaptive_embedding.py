@@ -89,7 +89,7 @@ def test_embedding_confidence_matches_model(spark, tmp_path):
     corpus = fakeshop_spark_df(spark, n_sites=1, n_categories=3,
                                n_subcats=2, n_products=2)
     cfg = CrawlConfig(
-        max_depth=3, use_bloom=False,
+        max_depth=3,
         adaptive={"strategy": "embedding", "query": QUERY, "dim": DIM,
                   # thresholds no stop can reach -> full crawl, full history
                   "min_confidence": 0.0, "min_rel_improvement": 1e-12,
@@ -121,7 +121,7 @@ def test_embedding_converged_stop_matches_model(spark, tmp_path):
                                n_subcats=2, n_products=2)
     full = CrawlEngine(
         spark, Warehouse(str(tmp_path / "full")), CorpusFetcher(corpus),
-        CrawlConfig(max_depth=3, use_bloom=False))
+        CrawlConfig(max_depth=3))
     s_full = full.run([SEED])
     hist, vals = _model_history(_kb_by_round(full))
 
@@ -139,7 +139,7 @@ def test_embedding_converged_stop_matches_model(spark, tmp_path):
 
     adaptive = CrawlEngine(
         spark, Warehouse(str(tmp_path / "ad")), CorpusFetcher(corpus),
-        CrawlConfig(max_depth=3, use_bloom=False,
+        CrawlConfig(max_depth=3,
                     adaptive={"strategy": "embedding", "query": QUERY,
                               "dim": DIM, "min_confidence": -1.0,
                               "min_rel_improvement": rel,
@@ -157,7 +157,7 @@ def test_embedding_irrelevant_stop(spark, tmp_path):
                                n_subcats=2, n_products=2)
     eng = CrawlEngine(
         spark, Warehouse(str(tmp_path / "wh")), CorpusFetcher(corpus),
-        CrawlConfig(max_depth=3, use_bloom=False,
+        CrawlConfig(max_depth=3,
                     adaptive={"strategy": "embedding", "query": QUERY,
                               "dim": DIM, "min_confidence": 2.0}))
     stats = eng.run([SEED])
@@ -181,10 +181,10 @@ def test_embedding_state_survives_resume(spark, tmp_path):
 
     wh = Warehouse(str(tmp_path / "wh"))
     CrawlEngine(spark, wh, CorpusFetcher(corpus),
-                CrawlConfig(max_depth=3, use_bloom=False, max_rounds=2,
+                CrawlConfig(max_depth=3, max_rounds=2,
                             adaptive=adaptive)).run([SEED])
     eng = CrawlEngine(spark, wh, CorpusFetcher(corpus),
-                      CrawlConfig(max_depth=3, use_bloom=False,
+                      CrawlConfig(max_depth=3,
                                   adaptive=adaptive))
     stats = eng.run([SEED])
 

@@ -67,7 +67,7 @@ def test_adaptive_stop_matches_model(spark, tmp_path):
     corpus = fakeshop_spark_df(spark, n_sites=1, n_categories=3,
                                n_subcats=2, n_products=2)
     cfg = CrawlConfig(
-        max_depth=3, use_bloom=False,
+        max_depth=3,
         adaptive={"query_terms": TERMS, "confidence_threshold": 0.5},
     )
     eng = CrawlEngine(spark, Warehouse(str(tmp_path / "wh")),
@@ -94,13 +94,13 @@ def test_adaptive_stops_earlier_than_plain(spark, tmp_path):
                                n_subcats=2, n_products=2)
     plain = CrawlEngine(
         spark, Warehouse(str(tmp_path / "a")), CorpusFetcher(corpus),
-        CrawlConfig(max_depth=3, use_bloom=False),
+        CrawlConfig(max_depth=3),
     )
     s_plain = plain.run([SEED])
     # near-zero threshold -> first check stops the crawl
     adaptive = CrawlEngine(
         spark, Warehouse(str(tmp_path / "b")), CorpusFetcher(corpus),
-        CrawlConfig(max_depth=3, use_bloom=False,
+        CrawlConfig(max_depth=3,
                     adaptive={"query_terms": TERMS,
                               "confidence_threshold": 0.0}),
     )
@@ -118,11 +118,11 @@ def test_adaptive_state_survives_resume(spark, tmp_path):
     adaptive = {"query_terms": TERMS, "confidence_threshold": 2.0}
 
     wh = Warehouse(str(tmp_path / "wh"))
-    cfg_half = CrawlConfig(max_depth=3, use_bloom=False, max_rounds=2,
+    cfg_half = CrawlConfig(max_depth=3, max_rounds=2,
                            adaptive=adaptive)
     CrawlEngine(spark, wh, CorpusFetcher(corpus), cfg_half).run([SEED])
 
-    cfg_full = CrawlConfig(max_depth=3, use_bloom=False, adaptive=adaptive)
+    cfg_full = CrawlConfig(max_depth=3, adaptive=adaptive)
     eng = CrawlEngine(spark, wh, CorpusFetcher(corpus), cfg_full)
     stats = eng.run([SEED])
 

@@ -1,16 +1,21 @@
-"""Cuckoo-filter seen-set (engine/cuckoo.py) — the deletion-capable
-twin of the bloom shards (north rule: "bloom/cuckoo URL-seen").
+"""Cuckoo-filter seen-set (engine/cuckoo.py), the engine's URL-seen
+pre-filter (north rule: "bloom/cuckoo URL-seen").
 
-Contract pinned here, mirroring tests/test_bloom_scale.py:
+Contract pinned here:
   - NO FALSE NEGATIVES, even past capacity: a failed eviction chain
     stashes a sentinel that keeps the displaced key's membership.
   - FP budget: 16-bit fingerprints put design FP around 2*4/2^16
     (~1.2e-4); the test allows 1e-3.
+  - an overfilled filter spills into the stash; the state-sized
+    rebuild the engine runs when seen outgrows capacity() empties it.
   - deletion removes membership without touching other keys.
-  - blobs never ride through the driver (static check, as for bloom).
+  - blobs never ride through the driver (static check).
   - determinism: same deltas in the same order -> byte-identical blobs.
-  - engine equivalence: a crawl with seen_filter="cuckoo" crawls
-    exactly the set a bloom run and a filter-free run crawl.
+  - engine equivalence: a crawl whose filter lags the seen table by
+    more than a round crawls exactly the set of a run synced every
+    round and of an exact-only run, and so does a run resumed from a
+    checkpoint whose filter table is missing (the mid-crawl engage
+    itself is test_bloom_scale.py).
 """
 
 from __future__ import annotations
@@ -30,6 +35,10 @@ from crawl4ai_spark.engine.cuckoo import (
     size_buckets,
 )
 from crawl4ai_spark.engine.tables import SnapshotTable
+
+SEED = "http://shop0.fakeshop.test/index.html"
+# never reached by the test crawls: the exact-only reference run
+EXACT_ONLY = 10**9
 
 
 def _hashes(spark, start, n):
@@ -63,6 +72,35 @@ def test_no_false_negatives_and_fp_budget(spark, tmp_path):
     extra = _hashes(spark, 10**6, 500)
     c.add_hashes(spark, extra)
     assert c.probe(spark, extra).where(~F.col("maybe_seen")).count() == 0
+
+
+def _stash_total(c, spark):
+    return sum(len(r.stash) // 8 for r in c.table.read(spark).collect())
+
+
+def test_rebuild_restores_fp_budget(spark, tmp_path):
+    """Overfilling an undersized filter pushes it past capacity() and
+    spills fingerprints into the stash (probe cost degrades toward an
+    exact check); a state-sized rebuild — what the engine does at the
+    round boundary when seen outgrows capacity — empties the stash and
+    keeps FP within budget. Membership holds throughout."""
+    t = SnapshotTable(str(tmp_path / "ck"))
+    c = CuckooSeenSet(t, n_shards=1)
+    n = 4_400
+    keys = _hashes(spark, 0, n)
+    fresh = _hashes(spark, n, 20_000)
+    # deliberately undersized (expected_n lied low, floor size kicks in)
+    c.build(spark, keys, expected_n=100, headroom=1.0)
+    assert n > c.capacity()
+    assert _stash_total(c, spark) > 0
+    assert c.probe(spark, keys).where(~F.col("maybe_seen")).count() == 0
+
+    c.build(spark, keys, expected_n=n, headroom=1.0)  # the rebuild path
+    assert n <= c.capacity()
+    assert _stash_total(c, spark) == 0
+    assert c.probe(spark, keys).where(~F.col("maybe_seen")).count() == 0
+    fp = c.probe(spark, fresh).where("maybe_seen").count() / 20_000
+    assert fp <= 1e-3, fp
 
 
 def test_delete_removes_membership(spark, tmp_path):
@@ -119,38 +157,44 @@ def test_no_driver_blob_hops():
         assert banned not in src, banned
 
 
-def test_cuckoo_engine_run_matches_bloom_and_exact(spark, tmp_path):
-    """A crawl with seen_filter='cuckoo' (engaged from round 0) crawls
-    exactly the set of the bloom run and the filter-free run — the
-    pre-filter is semantics-free in every backend."""
+def _crawl(spark, wh_dir, cfg):
     from crawl4ai_spark.corpus.fakeshop import fakeshop_spark_df
     from crawl4ai_spark.engine.fetch import CorpusFetcher
-    from crawl4ai_spark.engine.frontier import CrawlConfig, CrawlEngine
+    from crawl4ai_spark.engine.frontier import CrawlEngine
     from crawl4ai_spark.engine.tables import Warehouse
 
     corpus = fakeshop_spark_df(spark, n_sites=1, n_categories=3,
                                n_subcats=2, n_products=2)
-    seed = ["http://shop0.fakeshop.test/index.html"]
+    eng = CrawlEngine(spark, Warehouse(str(wh_dir)), CorpusFetcher(corpus),
+                      cfg)
+    eng.run([SEED])
+    return eng, sorted(
+        (r.url_norm, r.depth)
+        for r in eng.t_pages.read(spark).select("url_norm", "depth").collect()
+    )
 
-    def crawl(subdir, **kw):
-        eng = CrawlEngine(
-            spark, Warehouse(str(tmp_path / subdir)), CorpusFetcher(corpus),
-            CrawlConfig(max_depth=3, n_shards=4, bloom_sync_rounds=1, **kw),
-        )
-        eng.run(seed)
-        return eng, sorted(
-            (r.url_norm, r.depth)
-            for r in eng.t_pages.read(spark).select("url_norm", "depth").collect()
-        )
 
-    eng_ck, got_ck = crawl("ck", use_bloom=True, seen_filter="cuckoo",
-                           bloom_min_seen=5)
-    assert eng_ck._bloom_built
-    assert isinstance(eng_ck.bloom, CuckooSeenSet)
-    assert eng_ck.t_bloom.read(spark).count() > 0
-    _, got_bl = crawl("bl", use_bloom=True, bloom_min_seen=5)
-    _, got_off = crawl("off", use_bloom=False)
-    assert got_ck == got_bl == got_off
+def _cfg(**kw):
+    from crawl4ai_spark.engine.frontier import CrawlConfig
+
+    return CrawlConfig(**{"max_depth": 3, "n_shards": 4,
+                          "bloom_sync_rounds": 1, **kw})
+
+
+def test_cuckoo_engine_run_matches_bloom_and_exact(spark, tmp_path):
+    """The cuckoo-filtered crawl does not depend on the bloom_* sync
+    settings: a run whose shards lag the seen table by up to two rounds
+    (bloom_sync_rounds=3, so the probe misses the newest rounds and the
+    unsynced-delta anti-join must catch them) crawls exactly the set of
+    a run synced every round and of an exact-only run."""
+    eng_lag, got_lag = _crawl(spark, tmp_path / "lag",
+                              _cfg(bloom_min_seen=5, bloom_sync_rounds=3))
+    assert eng_lag._bloom_built
+    assert eng_lag.t_bloom.read(spark).count() > 0
+    _, got_sync = _crawl(spark, tmp_path / "sync", _cfg(bloom_min_seen=5))
+    _, got_off = _crawl(spark, tmp_path / "off",
+                        _cfg(bloom_min_seen=EXACT_ONLY))
+    assert got_lag == got_sync == got_off
 
 
 def test_add_hashes_bootstraps_empty_table(spark, tmp_path):
@@ -166,52 +210,33 @@ def test_add_hashes_bootstraps_empty_table(spark, tmp_path):
     assert c.probe(spark, keys).where(~F.col("maybe_seen")).count() == 0
 
 
-def test_m_bits_setter_rounds_to_power_of_two():
-    t = object()
-    c = CuckooSeenSet(t, n_shards=4)
-    c.m_bits = 3000 * SLOTS * 16  # a non-pow2 checkpoint value
-    assert c.m_buckets == 4096    # rounded UP, involution-safe
-    c.m_bits = 1024 * SLOTS * 16
-    assert c.m_buckets == 1024    # pow2 passes through unchanged
-
-
-def test_resume_across_filter_backend_switch(spark, tmp_path):
-    """Resuming a bloom-built warehouse with seen_filter='cuckoo' must
-    NOT trust the checkpoint's bloom_built flag against the (empty)
-    cuckoo table — that would mark every synced URL definitely-new and
+def test_resume_with_missing_filter_table(spark, tmp_path):
+    """A checkpoint that says the filter is built, resumed against a
+    missing filter table (or, as a manifest written before m_buckets
+    was recorded, without the filter's size) must NOT trust the flag:
+    an empty filter would mark every synced URL definitely-new and
     mass re-crawl. The guard falls back to exact-only dedup, so the
-    final crawled multiset equals a straight-through run's."""
+    crawled multiset equals a straight-through run's."""
     import dataclasses
+    import json
+    import shutil
 
-    from crawl4ai_spark.corpus.fakeshop import fakeshop_spark_df
-    from crawl4ai_spark.engine.fetch import CorpusFetcher
-    from crawl4ai_spark.engine.frontier import CrawlConfig, CrawlEngine
-    from crawl4ai_spark.engine.tables import Warehouse
+    cfg = _cfg(bloom_min_seen=5)
+    _, want = _crawl(spark, tmp_path / "s", cfg)
 
-    corpus = fakeshop_spark_df(spark, n_sites=1, n_categories=3,
-                               n_subcats=2, n_products=2)
-    seed = ["http://shop0.fakeshop.test/index.html"]
-    bloom_cfg = CrawlConfig(max_depth=3, n_shards=4, bloom_sync_rounds=1,
-                            bloom_min_seen=5, use_bloom=True)
+    part, _ = _crawl(spark, tmp_path / "x",
+                     dataclasses.replace(cfg, max_rounds=2))
+    assert part._bloom_built  # the checkpoint really says built
+    shutil.copytree(tmp_path / "x", tmp_path / "y")
 
-    def pages_of(eng):
-        return sorted((r.url_norm, r.depth) for r in
-                      eng.t_pages.read(spark)
-                      .select("url_norm", "depth").collect())
+    shutil.rmtree(tmp_path / "x" / "seen_cuckoo")
+    _, got = _crawl(spark, tmp_path / "x", cfg)
+    assert got == want  # no duplicates, nothing lost
 
-    straight = CrawlEngine(spark, Warehouse(str(tmp_path / "s")),
-                           CorpusFetcher(corpus), bloom_cfg)
-    straight.run(seed)
-    want = pages_of(straight)
-
-    part = CrawlEngine(spark, Warehouse(str(tmp_path / "x")),
-                       CorpusFetcher(corpus),
-                       dataclasses.replace(bloom_cfg, max_rounds=2))
-    part.run(seed)
-    assert part._bloom_built  # the checkpoint really says bloom_built
-
-    switched = CrawlEngine(
-        spark, Warehouse(str(tmp_path / "x")), CorpusFetcher(corpus),
-        dataclasses.replace(bloom_cfg, seen_filter="cuckoo"))
-    switched.run(seed)
-    assert pages_of(switched) == want  # no duplicates, nothing lost
+    manifest = tmp_path / "y" / "round_manifest.json"
+    rounds = json.loads(manifest.read_text())
+    for r in rounds:
+        del r["bloom_m_buckets"]
+    manifest.write_text(json.dumps(rounds))
+    _, got = _crawl(spark, tmp_path / "y", cfg)
+    assert got == want

@@ -184,7 +184,7 @@ def _engine(spark, tmp_path, subdir, **cfg_kw):
                                n_subcats=2, n_products=2)
     return CrawlEngine(
         spark, Warehouse(str(tmp_path / subdir)), CorpusFetcher(corpus),
-        CrawlConfig(max_depth=3, max_rounds=12, use_bloom=False, **cfg_kw),
+        CrawlConfig(max_depth=3, max_rounds=12, **cfg_kw),
     )
 
 

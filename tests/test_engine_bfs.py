@@ -49,7 +49,7 @@ def crawl_multiset(eng, spark):
 
 
 def test_bfs_matches_reference(spark, tmp_path, corpus_pages, web):
-    cfg = CrawlConfig(max_depth=3, use_bloom=True, bloom_min_seen=0, bloom_m_bits=1 << 16, n_shards=8)
+    cfg = CrawlConfig(max_depth=3, bloom_min_seen=0, n_shards=8)
     eng, stats = run_engine(spark, tmp_path, corpus_pages, cfg)
 
     log, visited = reference_bfs(web, SEED_NORM, max_depth=3)
@@ -88,14 +88,15 @@ def test_bfs_matches_reference(spark, tmp_path, corpus_pages, web):
 
 
 def test_bfs_exact_seen_no_bloom_matches_bloom(spark, tmp_path, corpus_pages, web):
-    cfg = CrawlConfig(max_depth=2, use_bloom=False)
+    # threshold never reached: exact anti-join only
+    cfg = CrawlConfig(max_depth=2, bloom_min_seen=10**9)
     eng, _ = run_engine(spark, tmp_path, corpus_pages, cfg)
     log, visited = reference_bfs(web, SEED_NORM, max_depth=2)
     assert crawl_multiset(eng, spark) == sorted((u, d) for (u, d, _p, _s) in log)
 
 
 def test_max_pages_cap(spark, tmp_path, corpus_pages):
-    cfg = CrawlConfig(max_depth=3, max_pages=8, use_bloom=False)
+    cfg = CrawlConfig(max_depth=3, max_pages=8)
     eng, stats = run_engine(spark, tmp_path, corpus_pages, cfg)
     # reference semantics: the level that crosses the cap still completes,
     # discovery stops after
@@ -106,7 +107,7 @@ def test_max_pages_cap(spark, tmp_path, corpus_pages):
 
 def test_politeness_budget_limits_per_round(spark, tmp_path, corpus_pages, web):
     cfg = CrawlConfig(
-        max_depth=3, base_host_budget=3, use_bloom=False, max_rounds=40
+        max_depth=3, base_host_budget=3, max_rounds=40
     )
     eng, stats = run_engine(spark, tmp_path, corpus_pages, cfg)
     per_round_host = (
@@ -124,7 +125,7 @@ def test_politeness_budget_limits_per_round(spark, tmp_path, corpus_pages, web):
 
 
 def test_resume_equals_uninterrupted(spark, tmp_path, corpus_pages):
-    cfg = CrawlConfig(max_depth=3, use_bloom=True, bloom_min_seen=0, bloom_m_bits=1 << 16, n_shards=8)
+    cfg = CrawlConfig(max_depth=3, bloom_min_seen=0, n_shards=8)
 
     eng_full, _ = run_engine(spark, tmp_path / "full", corpus_pages, cfg)
     full_pages = crawl_multiset(eng_full, spark)
@@ -134,7 +135,7 @@ def test_resume_equals_uninterrupted(spark, tmp_path, corpus_pages):
 
     # partial run: stop after 2 rounds
     cfg_partial = CrawlConfig(
-        max_depth=3, use_bloom=True, bloom_min_seen=0, bloom_m_bits=1 << 16, n_shards=8, max_rounds=2
+        max_depth=3, bloom_min_seen=0, n_shards=8, max_rounds=2
     )
     corpus_df = fakeshop_spark_df(spark, n_sites=1, n_categories=3, n_subcats=2, n_products=2)
     wh = Warehouse(str(tmp_path / "part" / "wh"))
@@ -158,9 +159,9 @@ def test_capacity_cap_quantile_path(spark, tmp_path, corpus_pages):
     0.0): the tied band is sub-selected deterministically, so the crawl
     admits ~remaining candidates per round — never whole levels — and
     two runs pick the identical set."""
-    cfg_exact = CrawlConfig(max_depth=3, max_pages=8, use_bloom=False)
+    cfg_exact = CrawlConfig(max_depth=3, max_pages=8)
     eng_a, sa = run_engine(spark, tmp_path / "a", corpus_pages, cfg_exact)
-    cfg_quant = CrawlConfig(max_depth=3, max_pages=8, use_bloom=False,
+    cfg_quant = CrawlConfig(max_depth=3, max_pages=8,
                             cap_exact_limit=0)
     eng_b, sb = run_engine(spark, tmp_path / "b", corpus_pages, cfg_quant)
     a, b = crawl_multiset(eng_a, spark), crawl_multiset(eng_b, spark)

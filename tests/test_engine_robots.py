@@ -21,7 +21,7 @@ def test_robots_denied_pages_are_403(spark, tmp_path):
     )
     eng = CrawlEngine(
         spark, Warehouse(str(tmp_path / "wh")), CorpusFetcher(corpus),
-        CrawlConfig(max_depth=3, use_bloom=False), robots=robots,
+        CrawlConfig(max_depth=3), robots=robots,
     )
     eng.run([SEED])
     pages = eng.t_pages.read(spark).collect()

@@ -49,7 +49,7 @@ def test_hub_skew_round_end_to_end(spark, tmp_path):
     wh = Warehouse(str(tmp_path / "wh"))
     eng = CrawlEngine(
         spark, wh, CorpusFetcher(corpus),
-        CrawlConfig(max_depth=0, mode="bfs", use_bloom=False,
+        CrawlConfig(max_depth=0, mode="bfs",
                     base_host_budget=BUDGET, n_salts=N_SALTS,
                     max_rounds=1),
     )
@@ -92,7 +92,7 @@ def test_hub_skew_round_end_to_end(spark, tmp_path):
     # the next slice is exactly BUDGET again)
     eng2 = CrawlEngine(
         spark, wh, CorpusFetcher(corpus),
-        CrawlConfig(max_depth=0, mode="bfs", use_bloom=False,
+        CrawlConfig(max_depth=0, mode="bfs",
                     base_host_budget=BUDGET, n_salts=N_SALTS,
                     max_rounds=2),
     )

@@ -98,6 +98,16 @@ def test_wire_bytes_arrays_nulls_and_bool_keys(spark, tmp_path):
     assert keys == {b"True", b"False"}
 
 
+def test_null_bool_key_skipped(spark):
+    """A NULL boolean key drops the row like any null key; it must not
+    serialize as b"False"."""
+    df = spark.createDataFrame([(None, 1), (True, 2), (False, 3)],
+                               "flag boolean, n long")
+    rows = kafka_messages(df, "t", "flag", ["n"]).collect()
+    assert sorted((bytes(r.key), bytes(r.value)) for r in rows) == [
+        (b"False", b'{"n": 3}'), (b"True", b'{"n": 2}')]
+
+
 def test_mixed_send_paths_share_offset_type(spark, tmp_path):
     """send_and_wait writes offset as long; send() must too, or the
     topic dir holds conflicting parquet types and reads break."""

@@ -128,7 +128,7 @@ def test_add_hashes_derives_m_from_stored_shards(spark, tmp_path):
         expected_n=500, headroom=1.0)
     stored_m = c1.m_buckets
 
-    # a fresh handle whose driver mirror diverged (e.g. m_bits restore)
+    # a fresh handle whose driver mirror diverged (e.g. a stale restore)
     c2 = CuckooSeenSet(t, n_shards=4, m_buckets=stored_m * 8)
     c2.add_hashes(spark, spark.range(500, 600).select(
         F.xxhash64(F.col("id").cast("string")).alias("url_hash")))

@@ -51,7 +51,7 @@ def test_engine_routes_and_skips(spark, tmp_path):
     corpus = fakeshop_spark_df(spark, n_sites=1, n_categories=2,
                                n_subcats=1, n_products=1)
     cfg = CrawlConfig(
-        max_depth=2, use_bloom=False,
+        max_depth=2,
         url_configs=[
             {"url_matcher": "*index*"},
             {"url_matcher": "*product*"},

@@ -4,11 +4,9 @@ Contract pinned here:
   - expiry is a metadata-only dir drop on the round-partitioned seen
     table (no rewrite): an expired URL rediscovered via links is
     crawled AGAIN; without TTL every URL is crawled exactly once.
-  - with seen_filter="cuckoo" the expired hashes are deleted from the
-    filter shards (the deletion capability the bloom lacks); with the
-    bloom backend stale filter entries are only pre-filter FPs —
-    the recrawl semantics are identical (exactness never depends on
-    the pre-filter).
+  - the expired hashes are deleted from the cuckoo filter shards; the
+    recrawl semantics equal an exact-only run's (exactness never
+    depends on the pre-filter).
   - a killed run resumes onto the post-expiry snapshot.
 """
 
@@ -22,15 +20,17 @@ from crawl4ai_spark.engine.frontier import CrawlConfig, CrawlEngine, _round_of_d
 from crawl4ai_spark.engine.tables import Warehouse
 
 SEED = "http://shop0.fakeshop.test/index.html"
+# never reached by the test crawls: the exact-only reference run
+EXACT_ONLY = 10**9
 
 
-def _crawl(spark, tmp_path, subdir, sync_rounds=1, **kw):
+def _crawl(spark, tmp_path, subdir, sync_rounds=1, min_seen=5, **kw):
     corpus = fakeshop_spark_df(spark, n_sites=1, n_categories=3,
                                n_subcats=2, n_products=2)
     eng = CrawlEngine(
         spark, Warehouse(str(tmp_path / subdir)), CorpusFetcher(corpus),
         CrawlConfig(max_depth=4, n_shards=4, bloom_sync_rounds=sync_rounds,
-                    bloom_min_seen=5, **kw),
+                    bloom_min_seen=min_seen, **kw),
     )
     eng.run([SEED])
     return eng
@@ -49,8 +49,7 @@ def test_ttl_recrawls_expired_urls(spark, tmp_path):
     # second time (the rediscovery must postdate the expiry — a longer
     # ttl on this shallow corpus expires URLs only after the last page
     # that links to them has already been crawled)
-    eng = _crawl(spark, tmp_path, "ttl", seen_ttl_rounds=1,
-                 use_bloom=True, seen_filter="cuckoo")
+    eng = _crawl(spark, tmp_path, "ttl", seen_ttl_rounds=1)
     pages = eng.t_pages.read(spark)
     by_url = {r.url_norm: r["count"]
               for r in pages.groupBy("url_norm").count()
@@ -66,8 +65,7 @@ def test_ttl_recrawls_expired_urls(spark, tmp_path):
 
 
 def test_no_ttl_crawls_each_url_once(spark, tmp_path):
-    eng = _crawl(spark, tmp_path, "nottl", use_bloom=True,
-                 seen_filter="cuckoo")
+    eng = _crawl(spark, tmp_path, "nottl")
     pages = eng.t_pages.read(spark)
     # the SEED may be re-crawled once (seen starts empty — the
     # documented reference quirk, frontier.init_from_seeds); every
@@ -79,8 +77,9 @@ def test_no_ttl_crawls_each_url_once(spark, tmp_path):
 
 
 def test_ttl_with_bloom_backend_same_semantics(spark, tmp_path):
-    """The bloom backend cannot delete, but recrawl semantics must be
-    identical — stale filter entries only cost exact-anti-join rows."""
+    """With the filter engaged, TTL expiry deletes the expired hashes
+    from the cuckoo shards; the recrawl semantics must equal an
+    exact-only run's."""
     def crawled(subdir, **kw):
         eng = _crawl(spark, tmp_path, subdir, seen_ttl_rounds=2, **kw)
         return sorted(
@@ -89,17 +88,14 @@ def test_ttl_with_bloom_backend_same_semantics(spark, tmp_path):
             .select("url_norm", "depth").collect()
         )
 
-    assert crawled("bl", use_bloom=True) == \
-        crawled("ck", use_bloom=True, seen_filter="cuckoo") == \
-        crawled("off", use_bloom=False)
+    assert crawled("ck") == crawled("off", min_seen=EXACT_ONLY)
 
 
 def test_ttl_resume_after_kill(spark, tmp_path):
     corpus = fakeshop_spark_df(spark, n_sites=1, n_categories=3,
                                n_subcats=2, n_products=2)
     cfg = CrawlConfig(max_depth=4, n_shards=4, bloom_sync_rounds=1,
-                      bloom_min_seen=5, seen_ttl_rounds=2,
-                      use_bloom=True, seen_filter="cuckoo")
+                      bloom_min_seen=5, seen_ttl_rounds=2)
 
     import dataclasses
 
@@ -138,5 +134,4 @@ def test_ttl_with_lagged_sync_stays_exact(spark, tmp_path):
             .select("url_norm", "depth").collect()
         )
 
-    assert crawled("lagck", use_bloom=True, seen_filter="cuckoo") == \
-        crawled("lagoff", use_bloom=False)
+    assert crawled("lagck") == crawled("lagoff", min_seen=EXACT_ONLY)

@@ -121,7 +121,7 @@ def main() -> None:
         wh = Warehouse(tempfile.mkdtemp(prefix=f"c4as_cluster_{label}_{tag}_"))
         eng = CrawlEngine(
             spark, wh, CorpusFetcher(corpus),
-            CrawlConfig(max_depth=0, mode="bfs", use_bloom=True,
+            CrawlConfig(max_depth=0, mode="bfs",
                         base_host_budget=n // 7 + 1, n_salts=8,
                         max_rounds=1),
         )

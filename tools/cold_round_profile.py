@@ -43,7 +43,7 @@ def run_once(spark, sf_dir: str, depth: int) -> dict:
     wh = Warehouse(tempfile.mkdtemp(prefix="c4as_prof_"))
     eng = CrawlEngine(
         spark, wh, CorpusFetcher(corpus),
-        CrawlConfig(max_depth=depth, mode="bfs", use_bloom=True,
+        CrawlConfig(max_depth=depth, mode="bfs",
                     base_host_budget=4000, n_salts=8),
     )
     buf = io.StringIO()

@@ -100,9 +100,9 @@ def main():
     seen = frontier.select(F.xxhash64("url_norm").alias("url_hash")).limit(100)
     cands = frontier.select(F.xxhash64("url_norm").alias("url_hash"), "url_norm")
     sections.append((
-        "Seen-set exact anti-join (post-bloom residue)",
+        "Seen-set exact anti-join (post-filter residue)",
         "LeftAnti join; at this size broadcast, at 10^10 scale a shuffled "
-        "hash join whose left side the bloom pre-filter already shrank to "
+        "hash join whose left side the cuckoo pre-filter already shrank to "
         "dups + false positives.",
         fmt(cands.join(seen, "url_hash", "left_anti")),
     ))

@@ -16,10 +16,10 @@ select_fetch_batch) survives it:
      NOT hub_rows;
   3. stage-2 sees at most budget*n_salts rows for the hub (measured);
   4. selected counts are exact: hub == budget, tail == all;
-  5. bloom: build + probe over all N hashes; shard blobs live in the
-     shard table (executor-built via applyInPandas, never a driver
-     collect) — the report prints shard count/bytes and the measured
-     false-positive rate of a disjoint probe set.
+  5. seen filter: cuckoo build + probe over all N hashes; shard blobs
+     live in the shard table (executor-built via applyInPandas, never a
+     driver collect) — the report prints shard count/bytes and the
+     measured false-positive rate of a disjoint probe set.
 
 Usage:
   python tools/frontier_stress.py [N] [hub_pct] [budget] [n_salts] [cpus]
@@ -76,7 +76,7 @@ def main() -> None:
     cpus = sys.argv[5] if len(sys.argv) > 5 else os.environ.get(
         "SPARK_GRAFT_CPUS", "32")
 
-    from crawl4ai_spark.engine.bloom import BloomSeenSet
+    from crawl4ai_spark.engine.cuckoo import CuckooSeenSet
     from crawl4ai_spark.engine.politeness import select_fetch_batch
     from crawl4ai_spark.engine.tables import Warehouse
     from crawl4ai_spark.session import build_session
@@ -143,14 +143,16 @@ def main() -> None:
         "host" in plan and plan.count("Window") >= 2
     )
 
-    # -- bloom at the same scale ----------------------------------------
+    # -- seen filter at the same scale ----------------------------------
     wh = Warehouse(tempfile.mkdtemp(prefix="c4as_stress_"))
-    bloom = BloomSeenSet(wh.table("seen_bloom"), n_shards=32)
+    cuckoo = CuckooSeenSet(wh.table("seen_cuckoo"), n_shards=32)
     t0 = time.monotonic()
-    bloom.build(spark, frontier.select("url_hash"), expected_n=n_actual)
+    cuckoo.build(spark, frontier.select("url_hash"), expected_n=n_actual)
     build_s = time.monotonic() - t0
-    shards = bloom.table.read(spark).select(
-        "shard_id", F.octet_length("bloom").alias("bytes"), "n_items"
+    shards = cuckoo.table.read(spark).select(
+        "shard_id",
+        (F.octet_length("table") + F.octet_length("stash")).alias("bytes"),
+        "n_items",
     ).collect()
     # disjoint probe set: ids shifted past n -> every hit is a false pos
     probe = spark.range(n, n + 1_000_000).select(
@@ -158,15 +160,15 @@ def main() -> None:
             "https://probe%d.example.com/x/%d", F.col("id") % 7, F.col("id")
         )).alias("url_hash"))
     t0 = time.monotonic()
-    hits = bloom.probe(spark, probe).where("maybe_seen").count()
+    hits = cuckoo.probe(spark, probe).where("maybe_seen").count()
     probe_s = time.monotonic() - t0
     report.update({
-        "bloom_build_wall_s": round(build_s, 2),
-        "bloom_shards": len(shards),
-        "bloom_total_mb": round(sum(r.bytes for r in shards) / 2**20, 1),
-        "bloom_max_shard_mb": round(max(r.bytes for r in shards) / 2**20, 2),
-        "bloom_fp_rate": round(hits / 1_000_000, 6),
-        "bloom_probe_wall_s": round(probe_s, 2),
+        "cuckoo_build_wall_s": round(build_s, 2),
+        "cuckoo_shards": len(shards),
+        "cuckoo_total_mb": round(sum(r.bytes for r in shards) / 2**20, 1),
+        "cuckoo_max_shard_mb": round(max(r.bytes for r in shards) / 2**20, 2),
+        "cuckoo_fp_rate": round(hits / 1_000_000, 6),
+        "cuckoo_probe_wall_s": round(probe_s, 2),
     })
 
     frontier.unpersist()

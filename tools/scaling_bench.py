@@ -74,7 +74,7 @@ def run_once(cores: int, replicas: int, sf_dir: str) -> dict:
         wh = Warehouse(tempfile.mkdtemp(prefix=f"c4as_scale_{cores}_", dir=shm))
         eng = CrawlEngine(
             spark, wh, CorpusFetcher(corpus),
-            CrawlConfig(max_depth=0, mode="bfs", use_bloom=True,
+            CrawlConfig(max_depth=0, mode="bfs",
                         # politeness budget sized so the whole frontier
                         # clears in one round but both window stages +
                         # the winners join run for real

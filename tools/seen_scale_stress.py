@@ -1,32 +1,37 @@
-"""Seen-set scale stress: bloom + cuckoo at up to 10^9 keys.
+"""Seen-set scale stress: the cuckoo seen filter at up to 10^9 keys.
 
-VERDICT r4 #5: the seen-set evidence topped out at 10^8 candidates /
-1 GB of bloom shards; the engine's 10^10-URL claim rests on shard-count
-scaling being a pure config. This tool builds BOTH backends at N keys
-(default 10^9) with n_shards scaled to keep per-shard blobs in the tens
-of MB, and reports, per backend:
+Builds the engine's seen-set pre-filter (engine/cuckoo.py) sized for N
+keys (default 10^9), with n_shards scaled to keep per-shard blobs in
+the tens of MB, and reports:
 
-  - build wall + keys/s, shard count, total/max shard MB
+  - build wall + keys/s over the first 90% of the keys (sized for all
+    N), then add wall + keys/s for the last 10% as one delta
+    (add_hashes, the engine's per-round sync shape); shard count and
+    total/max shard MB
   - probe wall on 1M DISJOINT keys -> measured FP rate
   - probe wall on 1M PRESENT keys  -> false-negative count (must be 0)
-  - cuckoo only: a TTL-expiry delete wave (delete_pct% of the keyset as
-    a delta, engine/cuckoo.py delete_hashes), then re-probe:
+  - a TTL-expiry delete wave (delete_pct% of the keyset as a delta,
+    delete_hashes), then re-probe:
       * deleted sample  -> residual hit rate (shielding sentinels + FP
         only; must collapse toward the FP floor)
       * remaining sample -> false negatives (must be 0 — deletion can
         never evict another key's membership)
-    plus stash totals before/after (compaction bounded, ADVICE r4).
+    plus stash totals before/after (compaction keeps them bounded) and
+    the disjoint probe's wall and FP rate again after the wave.
+
+Buckets per shard are rounded up to a power of two, so the realised
+load (n_keys / capacity) depends on N: N = 0.95 * n_shards * 2^k * 3.8
+lands at load 0.95 (e.g. 60_564_766 keys over 32 shards, k = 19).
 
 Everything is executor-side: keys come from spark.range, shard blobs
 are built/merged/probed in applyInPandas/cogroup tasks; the driver only
 ever sees per-shard byte counts and scalar aggregates.
 
 Usage:
-  python tools/seen_scale_stress.py [N] [n_shards] [cpus] \
-      [backend: bloom|cuckoo|both] [delete_pct]
-Defaults: 1_000_000_000 256 $SPARK_GRAFT_CPUS|32 both 10
+  python tools/seen_scale_stress.py [N] [n_shards] [cpus] [delete_pct]
+Defaults: 1_000_000_000 256 $SPARK_GRAFT_CPUS|32 10
 
-Prints one JSON line per backend (BENCH.md quotes them).
+Prints one JSON line (BENCH.md quotes it).
 """
 
 from __future__ import annotations
@@ -42,6 +47,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 PROBE_N = 1_000_000
+# the engine builds with 4.0 growth headroom; the stress pins a tight
+# one so the blobs reflect a sized-for-N build
+HEADROOM = 1.05
 
 
 def key_hashes(spark, lo: int, hi: int, width: int, stride: int = 1):
@@ -53,11 +61,10 @@ def key_hashes(spark, lo: int, hi: int, width: int, stride: int = 1):
     return ids.select(F.xxhash64(url).alias("url_hash"))
 
 
-def shard_stats(filt, spark, blob_cols) -> dict:
+def shard_stats(filt, spark) -> dict:
     rows = filt.table.read(spark).select(
         "shard_id",
-        sum((F.octet_length(c) for c in blob_cols[1:]),
-            F.octet_length(blob_cols[0])).alias("bytes"),
+        (F.octet_length("table") + F.octet_length("stash")).alias("bytes"),
     ).collect()
     return {
         "shards": len(rows),
@@ -72,27 +79,31 @@ def timed_probe(filt, spark, probe_df) -> tuple[int, float]:
     return hits, time.monotonic() - t0
 
 
-def run_backend(spark, name: str, filt, blob_cols, n: int, width: int,
-                delete_pct: int, headroom: float) -> dict:
-    report: dict = {"metric": f"seen_scale_stress_{name}", "n_keys": n,
+def run(spark, filt, n: int, width: int, delete_pct: int) -> dict:
+    report: dict = {"metric": "seen_scale_stress_cuckoo", "n_keys": n,
                     "n_shards": filt.n_shards, "cpus": width,
-                    "headroom": headroom}
-    keys = key_hashes(spark, 0, n, width)
+                    "headroom": HEADROOM}
+    n_build = n - n // 10
 
     t0 = time.monotonic()
-    # engine default headroom is 4.0 (grow-without-rebuild margin); the
-    # stress pins a tighter one so the blobs reflect a sized-for-N build
-    filt.build(spark, keys, expected_n=n, headroom=headroom)
+    filt.build(spark, key_hashes(spark, 0, n_build, width), expected_n=n,
+               headroom=HEADROOM)
     build_s = time.monotonic() - t0
     report["capacity"] = filt.capacity()
     report["load_factor"] = round(n / filt.capacity(), 3)
     report["build_wall_s"] = round(build_s, 1)
-    report["build_keys_per_s"] = int(n / build_s)
-    report.update(shard_stats(filt, spark, blob_cols))
+    report["build_keys_per_s"] = int(n_build / build_s)
+
+    t0 = time.monotonic()
+    filt.add_hashes(spark, key_hashes(spark, n_build, n, width))
+    add_s = time.monotonic() - t0
+    report["add_wall_s"] = round(add_s, 1)
+    report["add_keys_per_s"] = int((n - n_build) / add_s)
+    report.update(shard_stats(filt, spark))
 
     # disjoint probe: ids shifted past n -> every hit is a false positive
-    fp_hits, fp_s = timed_probe(
-        filt, spark, key_hashes(spark, n, n + PROBE_N, width))
+    disjoint = key_hashes(spark, n, n + PROBE_N, width)
+    fp_hits, fp_s = timed_probe(filt, spark, disjoint)
     report["probe_wall_s"] = round(fp_s, 1)
     report["probe_keys_per_s"] = int(PROBE_N / fp_s)
     report["fp_rate"] = round(fp_hits / PROBE_N, 6)
@@ -105,7 +116,7 @@ def run_backend(spark, name: str, filt, blob_cols, n: int, width: int,
     report["present_probe_wall_s"] = round(pres_s, 1)
     report["false_negatives"] = n_present - pres_hits
 
-    if name == "cuckoo" and delete_pct > 0:
+    if delete_pct > 0:
         stash0 = filt.table.read(spark).agg(
             F.sum(F.octet_length("stash") / 8).alias("s"),
             F.sum("n_items").alias("n")).first()
@@ -129,6 +140,11 @@ def run_backend(spark, name: str, filt, blob_cols, n: int, width: int,
         report["stash_entries_before"] = int(stash0["s"] or 0)
         report["stash_entries_after"] = int(stash1["s"] or 0)
         report["n_items_after"] = int(stash1["n"] or 0)
+        # the same disjoint probe after the wave: probe cost and FP with
+        # the compacted stash
+        fp_hits, fp_s = timed_probe(filt, spark, disjoint)
+        report["post_delete_probe_wall_s"] = round(fp_s, 1)
+        report["post_delete_fp_rate"] = round(fp_hits / PROBE_N, 6)
 
         # post-delete samples use a stride NOT aligned with the doom
         # pattern (a multiple-of-100 stride lands every sampled id in
@@ -159,10 +175,8 @@ def main() -> None:
     n_shards = int(sys.argv[2]) if len(sys.argv) > 2 else 256
     cpus = sys.argv[3] if len(sys.argv) > 3 else os.environ.get(
         "SPARK_GRAFT_CPUS", "32")
-    backend = sys.argv[4] if len(sys.argv) > 4 else "both"
-    delete_pct = int(sys.argv[5]) if len(sys.argv) > 5 else 10
+    delete_pct = int(sys.argv[4]) if len(sys.argv) > 4 else 10
 
-    from crawl4ai_spark.engine.bloom import BloomSeenSet
     from crawl4ai_spark.engine.cuckoo import CuckooSeenSet
     from crawl4ai_spark.engine.tables import Warehouse
     from crawl4ai_spark.session import build_session
@@ -171,19 +185,10 @@ def main() -> None:
                           master=f"local[{cpus}]",
                           shuffle_partitions=int(n_shards))
     spark.sparkContext.setLogLevel("ERROR")
-    width = int(cpus)
     wh = Warehouse(tempfile.mkdtemp(prefix="c4as_seen_stress_"))
-
-    if backend in ("bloom", "both"):
-        filt = BloomSeenSet(wh.table("seen_bloom"), n_shards=n_shards)
-        print(json.dumps(run_backend(
-            spark, "bloom", filt, ["bloom"], n, width, 0,
-            headroom=1.5)), flush=True)
-    if backend in ("cuckoo", "both"):
-        filt = CuckooSeenSet(wh.table("seen_cuckoo"), n_shards=n_shards)
-        print(json.dumps(run_backend(
-            spark, "cuckoo", filt, ["table", "stash"], n, width,
-            delete_pct, headroom=1.05)), flush=True)
+    filt = CuckooSeenSet(wh.table("seen_cuckoo"), n_shards=n_shards)
+    print(json.dumps(run(spark, filt, n, int(cpus), delete_pct)),
+          flush=True)
     spark.stop()
 
 
