@@ -5,9 +5,17 @@ pre-filter for the exact seen-set anti-join (north-star rule:
 A cuckoo filter (Fan et al. 2014, "Cuckoo Filter: Practically Better
 Than Bloom") stores 16-bit fingerprints in m buckets x 4 slots; key x
 may live in bucket i1 = h(x) mod m or i2 = i1 XOR (h'(fp) mod m), so
-membership, insertion and DELETION are all two-bucket operations.
-Deletion is what seen-TTL recrawl scheduling needs (a URL leaves the
-seen set when its TTL expires) without rebuilding the filter.
+membership and insertion are two-bucket operations.
+
+The filter is APPEND-ONLY: a list of immutable segments, one per sync
+epoch, each a snapshot-table data dir. A sync writes one new segment
+holding only the delta's keys and never rewrites an old one. Seen-TTL
+recrawl scheduling drops whole segments whose newest round has
+expired — a metadata commit, no job and no per-key delete. A segment
+that has only partly expired keeps its stale keys; they are false
+positives, which the exact anti-join behind the filter absorbs. Past
+MAX_SEGMENTS live segments, the engine replaces them all with one
+build from the live seen table, like an LSM merge.
 
 Scale posture and storage contract:
   - shard_id = pmod(xxhash64(url_norm), n_shards); shards are BINARY
@@ -19,9 +27,11 @@ Scale posture and storage contract:
     of kicks); a failed fingerprint goes to the shard's exact OVERFLOW
     STASH (an int64 hash array probed alongside the table), so a full
     filter degrades to exact-check cost, never to a false negative.
-  - sizing from state: buckets per shard = next_pow2(expected *
-    headroom / n_shards / (4 * 0.95)); the engine rebuilds at a round
-    boundary when the seen count outgrows capacity().
+  - sizing per segment: each shard row is sized for its own keys,
+    buckets = next_pow2(n_keys / (4 * 0.95)), and carries its own
+    m_buckets; a probe checks every segment row of its shard with that
+    row's m. The false-positive rate adds up across live segments,
+    which MAX_SEGMENTS bounds.
 
 Insertion is a placement problem. The fast path is vectorized (per
 pass, the first remaining key targeting each bucket places
@@ -57,9 +67,9 @@ SHARD_SCHEMA = T.StructType(
 SLOTS = 4
 MAX_KICKS = 500
 TARGET_LOAD = 0.95
-# growth headroom on (re)build: room for 4x the expected keys, so the
-# engine's capacity rebuild runs rarely
-HEADROOM = 4.0
+# live segments past which the engine's next sync merges them into one
+# build from the seen table instead of appending another
+MAX_SEGMENTS = 8
 _FP_MUL = np.uint64(0x5BD1E995)  # partial-key hash for the i2 offset
 
 
@@ -190,40 +200,6 @@ def insert_keys(table: np.ndarray, stash: list[int], hashes: np.ndarray,
     return overflow
 
 
-STASH_COMPACT_LEN = 8
-
-
-def compact_stash(table: np.ndarray, stash: list[int], m: int) -> list[int]:
-    """Re-home stash sentinels into table slots freed by deletes.
-
-    A sentinel (fp, b) covers a key whose candidate buckets are
-    {b, alt(b, fp)}; writing fp into EITHER bucket satisfies every
-    probe the sentinel satisfied (probes check fp against both
-    buckets), so the sentinel can be dropped. Without this, a
-    long-lived TTL-churning filter only ever GROWS its stash — probe
-    cost degrades monotonically until a capacity rebuild happens to
-    run (ADVICE r4). Called whenever a shard is rewritten (insert or
-    delete pass) and the stash exceeds STASH_COMPACT_LEN. Returns the
-    surviving sentinels."""
-    kept: list[int] = []
-    for e in stash:
-        ue = np.uint64(np.int64(e))
-        fp = np.uint16((ue >> np.uint64(32)) & np.uint64(0xFFFF))
-        b1 = int(ue & np.uint64(0xFFFFFFFF))
-        b2 = int(_alt(np.array([b1]), np.array([fp], np.uint16), m)[0])
-        placed = False
-        for b in (b1, b2):
-            row = table[b]
-            empty = np.flatnonzero(row == 0)
-            if len(empty):
-                row[empty[0]] = fp
-                placed = True
-                break
-        if not placed:
-            kept.append(int(e))
-    return kept
-
-
 def _stash_contains(stash: np.ndarray, hashes: np.ndarray, m: int) -> np.ndarray:
     """Probe the overflow stash of fingerprint sentinels
     ((fp << 32) | bucket): a candidate matches if its fp equals the
@@ -255,162 +231,67 @@ def probe_keys(table: np.ndarray, stash: np.ndarray, hashes: np.ndarray,
     return hit | _stash_contains(stash, hashes, m)
 
 
-def delete_keys(table: np.ndarray, hashes: np.ndarray, m: int) -> int:
-    """Remove ONE matching fingerprint per key from either candidate
-    bucket (standard cuckoo rule: only delete keys known inserted).
-    Returns how many were found and removed."""
-    fps = _fingerprint(hashes)
-    i1s = _i1(hashes, m)
-    i2s = _alt(i1s, fps, m)
-    removed = 0
-    for j in range(len(hashes)):
-        for b in (int(i1s[j]), int(i2s[j])):
-            row = table[b]
-            slots = np.flatnonzero(row == fps[j])
-            if len(slots):
-                row[slots[0]] = 0
-                removed += 1
-                break
-    return removed
-
-
 class CuckooSeenSet:
-    """Sharded cuckoo-filter state over a SnapshotTable of
-    (shard_id, table, stash, m_buckets, n_items): build / add_hashes /
-    delete_hashes / probe, plus capacity() for the rebuild check."""
+    """Cuckoo-filter state over a SnapshotTable whose data dirs are
+    immutable SEGMENTS, each a set of (shard_id, table, stash,
+    m_buckets, n_items) rows: build / add_hashes / expire / probe.
 
-    def __init__(self, table, n_shards: int = 32, m_buckets: int = 1 << 14):
+    ``segments`` lists the live segments oldest first as
+    [data dir, newest round of its keys]; the engine records it in the
+    round manifest and restores it on resume."""
+
+    def __init__(self, table, n_shards: int = 32):
         self.table = table  # SnapshotTable
         self.n_shards = n_shards
-        self.m_buckets = m_buckets  # per-shard size; reset by build()
+        self.segments: list[list] = []
 
     def shard_col(self, hash_col):
         return F.pmod(hash_col, F.lit(self.n_shards)).cast("int")
 
-    def capacity(self) -> int:
-        return int(self.n_shards * self.m_buckets * SLOTS * TARGET_LOAD)
-
-    @staticmethod
-    def _shard_frame(sid: int, table: np.ndarray, stash: list[int] | np.ndarray,
-                     n_items: int) -> pd.DataFrame:
-        return pd.DataFrame({
-            "shard_id": [sid],
-            "table": [table.tobytes()],
-            "stash": [np.asarray(stash, dtype=np.int64).tobytes()],
-            "m_buckets": [table.shape[0]],
-            "n_items": [n_items],
-        })
-
-    @staticmethod
-    def _load(right: pd.DataFrame) -> tuple[np.ndarray, list[int], int, int]:
-        m = int(right["m_buckets"].iloc[0])
-        table = np.frombuffer(right["table"].iloc[0], dtype=np.uint16) \
-            .reshape(m, SLOTS).copy()
-        stash = list(np.frombuffer(right["stash"].iloc[0], dtype=np.int64))
-        return table, stash, m, int(right["n_items"].iloc[0])
-
-    # -- build: (re)create every shard, sized from state --------------------
-    def build(self, spark: SparkSession, hashes_df: DataFrame,
-              expected_n: int, headroom: float = HEADROOM) -> None:
-        self.m_buckets = size_buckets(int(expected_n * headroom), self.n_shards)
-        m = self.m_buckets
-
-        new = hashes_df.select(
-            self.shard_col(F.col("url_hash")).alias("shard_id"),
-            F.col("url_hash"),
-        )
+    def _shards(self, hashes_df: DataFrame) -> DataFrame:
+        """One segment's shard rows, each sized for its own keys."""
 
         def build_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-            sid = int(pdf["shard_id"].iloc[0])
             h = pdf["url_hash"].to_numpy(dtype=np.int64)
+            m = size_buckets(len(h), 1)
             table = np.zeros((m, SLOTS), dtype=np.uint16)
             stash: list[int] = []
             insert_keys(table, stash, h, m)
-            return CuckooSeenSet._shard_frame(sid, table, stash, len(h))
+            return pd.DataFrame({
+                "shard_id": [int(pdf["shard_id"].iloc[0])],
+                "table": [table.tobytes()],
+                "stash": [np.asarray(stash, dtype=np.int64).tobytes()],
+                "m_buckets": [m],
+                "n_items": [len(h)],
+            })
 
-        shards = new.groupBy("shard_id").applyInPandas(build_shard, SHARD_SCHEMA)
-        self.table.overwrite(shards)
-
-    # -- update: insert new hashes, executor-side ---------------------------
-    def add_hashes(self, spark: SparkSession, hashes_df: DataFrame) -> None:
-        prev = self.table.read(spark)
-        if prev is None:
-            self.build(spark, hashes_df, expected_n=1)
-            return
-        new = hashes_df.select(
-            self.shard_col(F.col("url_hash")).alias("shard_id"),
-            F.col("url_hash"),
-        )
-        # size any MISSING shard from the stored sibling shards, not the
-        # driver-side mirror: a restored m_buckets may disagree with
-        # what the shards were built with, and non-uniform m breaks the
-        # capacity() math and the involution (ADVICE r4)
-        mm = prev.agg(F.min("m_buckets").alias("lo"),
-                      F.max("m_buckets").alias("hi")).first()
-        if mm["lo"] is not None:
-            if int(mm["lo"]) != int(mm["hi"]):
-                raise ValueError(
-                    f"non-uniform cuckoo shard m_buckets: {mm['lo']} != {mm['hi']}"
-                )
-            self.m_buckets = int(mm["hi"])
-        cur_m = self.m_buckets
-
-        def merge_shard(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            h = left["url_hash"].to_numpy(dtype=np.int64) if not left.empty \
-                else np.empty(0, dtype=np.int64)
-            if right.empty:
-                sid = int(left["shard_id"].iloc[0])
-                table = np.zeros((cur_m, SLOTS), dtype=np.uint16)
-                stash: list[int] = []
-                n_prev = 0
-            else:
-                sid = int(right["shard_id"].iloc[0])
-                table, stash, _, n_prev = CuckooSeenSet._load(right)
-            insert_keys(table, stash, h, table.shape[0])
-            if len(stash) > STASH_COMPACT_LEN:
-                stash = compact_stash(table, stash, table.shape[0])
-            return CuckooSeenSet._shard_frame(sid, table, stash, n_prev + len(h))
-
-        updated = (
-            new.groupBy("shard_id")
-            .cogroup(prev.groupBy("shard_id"))
-            .applyInPandas(merge_shard, SHARD_SCHEMA)
-        )
-        self.table.overwrite(updated)
-
-    # -- delete: remove hashes (TTL expiry / recrawl scheduling) ------------
-    def delete_hashes(self, spark: SparkSession, hashes_df: DataFrame) -> None:
-        prev = self.table.read(spark)
-        if prev is None:
-            return
-        new = hashes_df.select(
-            self.shard_col(F.col("url_hash")).alias("shard_id"),
-            F.col("url_hash"),
+        return (
+            hashes_df.select(
+                self.shard_col(F.col("url_hash")).alias("shard_id"),
+                F.col("url_hash"),
+            )
+            .groupBy("shard_id")
+            .applyInPandas(build_shard, SHARD_SCHEMA)
         )
 
-        def del_shard(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            if right.empty:
-                return pd.DataFrame(columns=[f.name for f in SHARD_SCHEMA.fields])
-            sid = int(right["shard_id"].iloc[0])
-            table, stash, m, n_prev = CuckooSeenSet._load(right)
-            removed = 0
-            if not left.empty:
-                h = left["url_hash"].to_numpy(dtype=np.int64)
-                # sentinels stay: they may shield other keys' membership
-                removed = delete_keys(table, h, m)
-            if len(stash) > STASH_COMPACT_LEN:
-                # deletes just freed slots — prime time to re-home
-                # sentinels and shrink the per-probe stash scan
-                stash = compact_stash(table, stash, m)
-            return CuckooSeenSet._shard_frame(sid, table, stash,
-                                              max(0, n_prev - removed))
+    # -- build: one segment replacing all others (first engage, merge) -------
+    def build(self, spark: SparkSession, hashes_df: DataFrame,
+              newest_round: int) -> None:
+        self.table.overwrite(self._shards(hashes_df))
+        self.segments = [[self.table.snapshot_data()[-1], newest_round]]
 
-        updated = (
-            new.groupBy("shard_id")
-            .cogroup(prev.groupBy("shard_id"))
-            .applyInPandas(del_shard, SHARD_SCHEMA)
-        )
-        self.table.overwrite(updated)
+    # -- sync: append one segment holding only the delta's keys --------------
+    def add_hashes(self, spark: SparkSession, hashes_df: DataFrame,
+                   newest_round: int) -> None:
+        self.table.append(self._shards(hashes_df))
+        self.segments.append([self.table.snapshot_data()[-1], newest_round])
+
+    # -- TTL: drop whole segments (metadata commit, no job) ------------------
+    def expire(self, cutoff_round: int) -> None:
+        gone = [d for d, r in self.segments if r <= cutoff_round]
+        if gone:
+            self.table.drop_dirs(gone)
+            self.segments = [s for s in self.segments if s[1] > cutoff_round]
 
     # -- probe: definitely-new vs maybe-seen --------------------------------
     def probe(self, spark: SparkSession, cands: DataFrame,
@@ -428,13 +309,16 @@ class CuckooSeenSet:
             if left.empty:
                 return pd.DataFrame(columns=cand_cols + ["maybe_seen"])
             out = left[cand_cols].copy()
-            if right.empty:
-                out["maybe_seen"] = False
-                return out
-            table, stash, m, _ = CuckooSeenSet._load(right)
             h = left[hash_col].to_numpy(dtype=np.int64)
-            out["maybe_seen"] = probe_keys(
-                table, np.asarray(stash, dtype=np.int64), h, m)
+            hit = np.zeros(len(h), dtype=bool)
+            # one row per live segment holding this shard, each probed
+            # with its own size
+            for seg in right.itertuples(index=False):
+                m = int(seg.m_buckets)
+                table = np.frombuffer(seg.table, dtype=np.uint16).reshape(m, SLOTS)
+                stash = np.frombuffer(seg.stash, dtype=np.int64)
+                hit |= probe_keys(table, stash, h, m)
+            out["maybe_seen"] = hit
             return out
 
         return (

@@ -37,15 +37,15 @@ parent refined to min(parent_url) among same-round discoverers.
 Scale posture: frontier and seen are hash-distributed on xxhash64(url);
 politeness windows are salted two-stage to survive hub-host skew; the
 seen-set anti-join is pre-filtered by a partitioned cuckoo filter
-(engine/cuckoo.py) so only (dups + FP) rows shuffle; the filter is
-updated every `bloom_sync_rounds` rounds (an exact anti-join against
-the small recent-rounds seen DELTA covers the gap, so exact-set
-semantics hold at every round), sized from the live seen count, and
-rebuilt at a round boundary when outgrown; robots/host budgets
-broadcast; AQE handles residual skew. The cuckoo can delete, which
-seen_ttl_rounds recrawl scheduling needs: expiry drops round dirs from
-the round-partitioned seen table (metadata only) and deletes their
-hashes from the filter shards.
+(engine/cuckoo.py) so only (dups + FP) rows shuffle; every
+`bloom_sync_rounds` rounds the filter appends one immutable segment
+holding the seen DELTA since the last sync (an exact anti-join against
+that small delta covers the gap, so exact-set semantics hold at every
+round), and once MAX_SEGMENTS are live the next sync merges them into
+one build from the seen table; robots/host budgets broadcast; AQE
+handles residual skew. seen_ttl_rounds recrawl scheduling is
+metadata-only: expiry drops round dirs from the round-partitioned seen
+table and whole expired segments from the filter.
 """
 
 from __future__ import annotations
@@ -58,7 +58,7 @@ from typing import Callable, Optional
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from crawl4ai_spark.engine.cuckoo import CuckooSeenSet
+from crawl4ai_spark.engine.cuckoo import MAX_SEGMENTS, CuckooSeenSet
 from crawl4ai_spark.engine.politeness import (
     RATE_LIMIT_CODES,
     select_fetch_batch,
@@ -68,6 +68,16 @@ from crawl4ai_spark.engine.robots import apply_robots_gate
 from crawl4ai_spark.engine.tables import Warehouse
 from crawl4ai_spark.extraction.extract import extract_pages
 from crawl4ai_spark.functions.urlnorm import url_host, url_hash
+
+# AQE re-plans every exchange as its own driver-side query stage —
+# valuable on production-size rounds (runtime broadcast, skew-join
+# splitting over multi-GB shuffles) but pure fixed overhead on small
+# ones, where each of the round's ~10 exchanges adds a re-plan pause
+# and an extra job boundary. Rounds whose frontier is below this row
+# count run with AQE off; larger rounds (and every other query on the
+# session) keep the session's AQE setting. Sub-million-row shuffles
+# are KBs-to-MBs per partition — nothing AQE can improve.
+AQE_SMALL_ROUND_ROWS = 500_000
 
 
 @dataclass
@@ -92,19 +102,20 @@ class CrawlConfig:
     # the filter engages only once the exact seen set crosses this size
     # (it is a PRE-filter for a big anti-join; below this the anti-join
     # is already cheap and shard maintenance would be pure overhead).
-    # On crossing, shards are bulk-built from the seen table once, sized
-    # from the live count. Tests set 0 to engage it from round 0.
+    # On crossing, shards are bulk-built from the seen table once, each
+    # sized for its own keys. Tests set 0 to engage it from round 0.
     bloom_min_seen: int = 50_000
-    # filter shards are synced every K rounds; between syncs an exact
-    # anti-join against the (small) seen delta of unsynced rounds keeps
-    # dedup exact while amortizing the shard-write job to 1/K per round
+    # the filter is synced every K rounds, appending one segment of the
+    # rounds since the last sync; between syncs an exact anti-join
+    # against the (small) seen delta of unsynced rounds keeps dedup
+    # exact while amortizing the segment-write job to 1/K per round
     bloom_sync_rounds: int = 8
     # recrawl scheduling (default off): seen entries enqueued more than
     # this many rounds ago EXPIRE at the round close — an expired URL
     # that is rediscovered is crawled again. Expiry is a metadata-only
     # dir drop on the round-partitioned seen table (Iceberg DeleteFiles
-    # shape — no rewrite job), and the expired hashes are DELETED from
-    # the filter shards.
+    # shape — no rewrite job), and on the filter it drops every segment
+    # whose newest round expired.
     seen_ttl_rounds: Optional[int] = None
     # capacity cap: below this `remaining`, exact global top-k
     # (TakeOrdered); above it, an approx-quantile score cut — an exact
@@ -112,15 +123,6 @@ class CrawlConfig:
     cap_exact_limit: int = 1_000_000
     # loop control
     max_rounds: int = 1000
-    # AQE re-plans every exchange as its own driver-side query stage —
-    # valuable on production-size rounds (runtime broadcast, skew-join
-    # splitting over multi-GB shuffles) but pure fixed overhead on small
-    # ones, where each of the round's ~10 exchanges adds a re-plan pause
-    # and an extra job boundary. Rounds whose frontier is below this row
-    # count run with AQE off; larger rounds (and every other query on
-    # the session) keep the session's AQE setting. Sub-million-row
-    # shuffles are KBs-to-MBs per partition — nothing AQE can improve.
-    aqe_small_round_rows: int = 500_000
     # scoring/filtering: url Column -> Column
     scorer: Optional[Callable] = None
     url_filter: Optional[Callable] = None
@@ -279,6 +281,11 @@ class CrawlEngine:
                 cols.append(F.lit(None).cast(typ).alias(name))
         return df.select(*cols)
 
+    def _seen_rounds(self) -> list[tuple[str, int]]:
+        """(data dir, round) of the seen table's live per-round dirs."""
+        return [(d, r) for d in self.t_seen.snapshot_data()
+                if (r := _round_of_dir(d)) is not None]
+
     def _frontier_row(self, df: DataFrame) -> DataFrame:
         """Project a candidate df (url_norm, depth, parent_url, score)
         into the full frontier schema. One select, not a withColumn
@@ -379,20 +386,23 @@ class CrawlEngine:
         self._seen_count = last.get("seen_count", 0)
         self._bloom_built = last.get("bloom_built", False)
         self._bloom_synced_round = last.get("bloom_synced_round", -1)
-        if self._bloom_built and (not self.t_bloom.exists()
-                                  or not last.get("bloom_m_buckets")):
-            # filter table absent or size unrecorded: an absent table
-            # would mark every candidate definitely-new and bypass the
-            # exact anti-join for synced rounds — a mass re-crawl — and
-            # without its size capacity() is wrong. Fall back to
-            # exact-only dedup and empty the stale table; the filter
-            # rebuilds at its engage threshold.
+        segments = last.get("bloom_segments")
+        if self._bloom_built and (segments is None or not all(
+                os.path.isdir(os.path.join(self.t_bloom.path, d))
+                for d, _ in segments)):
+            # segment data absent or segments unrecorded (a manifest
+            # written before segments): a missing segment would mark its
+            # keys definitely-new and bypass the exact anti-join — a
+            # mass re-crawl — and without the segments' rounds TTL
+            # cannot expire them. Fall back to exact-only dedup and
+            # empty the stale table; the filter rebuilds at its engage
+            # threshold.
             self._bloom_built = False
             self._bloom_synced_round = -1
             last["tables"]["seen_bloom"] = []
+            segments = []
+        self.bloom.segments = segments or []
         self._frontier_count = last.get("frontier_count")
-        if self._bloom_built:
-            self.bloom.m_buckets = last["bloom_m_buckets"]
         self._adaptive_last_round = last.get("adaptive_last_round", -1)
         for name, tbl in [
             ("frontier", self.t_frontier), ("seen", self.t_seen),
@@ -439,7 +449,7 @@ class CrawlEngine:
                     break  # only resumed-from-old-manifest paths pay this job
                 small = (
                     self._frontier_count is not None
-                    and self._frontier_count < cfg.aqe_small_round_rows
+                    and self._frontier_count < AQE_SMALL_ROUND_ROWS
                 )
                 want = "false" if small else orig_aqe
                 if self.spark.conf.get(aqe_key) != want:
@@ -752,67 +762,49 @@ class CrawlEngine:
 
         # -- seen TTL expiry (recrawl scheduling; default off) --------------
         # The seen table holds exactly one round-stamped dir per round
-        # (plus the empty init snapshot), so expiry is a drop_dirs
-        # metadata commit — no job. _seen_count intentionally keeps the
-        # pre-expiry total: it only gates/sizes the pre-filter, where an
-        # overestimate is conservative (dead filter entries are FPs that
-        # fall through to the now-clean exact anti-join).
+        # that found new URLs (plus the empty init snapshot), so expiry
+        # is a drop_dirs metadata commit — no job — and so is dropping
+        # the filter segments whose newest round expired with them.
+        # _seen_count intentionally keeps the pre-expiry total: it only
+        # gates the pre-filter's engage threshold.
         if cfg.seen_ttl_rounds is not None:
             cutoff = rnd - cfg.seen_ttl_rounds
-            expired_rel = [
-                d for d in self.t_seen.snapshot_data()
-                if _round_of_dir(d) is not None and _round_of_dir(d) <= cutoff
-            ]
+            expired_rel = [d for d, r in self._seen_rounds() if r <= cutoff]
             if expired_rel:
-                if self._bloom_built:
-                    # delete ONLY rounds the amortized sync has actually
-                    # inserted (round <= _bloom_synced_round). Hashes
-                    # from unsynced expired rounds were never added —
-                    # and never will be, since their dirs drop below —
-                    # and deleting a never-inserted key can strip a live
-                    # key's colliding fingerprint (same 16-bit fp, same
-                    # bucket orbit), the false negative the filter
-                    # contract forbids.
-                    synced = [d for d in expired_rel
-                              if _round_of_dir(d) <= self._bloom_synced_round]
-                    if synced:
-                        exp = self.spark.read.parquet(*[
-                            os.path.join(self.t_seen.path, d) for d in synced
-                        ])
-                        self.bloom.delete_hashes(
-                            self.spark, exp.select("url_hash"))
                 self.t_seen.drop_dirs(expired_rel)
+            self.bloom.expire(cutoff)
         _tr("seen_ttl")
 
         # -- filter maintenance (amortized; exactness never depends on it)
-        # The post-adoption seen read only happens on rounds that will
-        # actually build/sync — a read costs real driver time (listing +
-        # plan), and most rounds need none.
-        if (
-            (not self._bloom_built and self._seen_count >= cfg.bloom_min_seen)
-            or (self._bloom_built
-                and rnd - self._bloom_synced_round >= cfg.bloom_sync_rounds)
+        # A sync appends one segment holding the seen dirs of the rounds
+        # since the last sync; with no such dir (no new URLs) it writes
+        # nothing and launches no job. Past MAX_SEGMENTS live segments
+        # the sync instead rebuilds one segment from the whole live seen
+        # table, which also sheds expired segments' stale keys.
+        build_due = not self._bloom_built and self._seen_count >= cfg.bloom_min_seen
+        if build_due or (
+            self._bloom_built
+            and rnd - self._bloom_synced_round >= cfg.bloom_sync_rounds
         ):
-            seen_now = self.t_seen.read(self.spark)
-            if not self._bloom_built and self._seen_count >= cfg.bloom_min_seen:
-                if seen_now is not None:
-                    self.bloom.build(
-                        self.spark, seen_now.select("url_hash"),
-                        expected_n=max(1, self._seen_count),
-                    )
-                self._bloom_built = True
-                self._bloom_synced_round = rnd
-            elif self._bloom_built and rnd - self._bloom_synced_round >= cfg.bloom_sync_rounds:
-                if self._seen_count > self.bloom.capacity() and seen_now is not None:
-                    # outgrown: rebuild larger at the round boundary
-                    self.bloom.build(
-                        self.spark, seen_now.select("url_hash"),
-                        expected_n=self._seen_count,
-                    )
-                elif seen_now is not None:
-                    delta = seen_now.where(F.col("round") > self._bloom_synced_round)
-                    self.bloom.add_hashes(self.spark, delta.select("url_hash"))
-                self._bloom_synced_round = rnd
+            live = self._seen_rounds()
+            delta = [(d, r) for d, r in live if r > self._bloom_synced_round]
+            if live and (build_due or (
+                    delta and len(self.bloom.segments) >= MAX_SEGMENTS)):
+                self.bloom.build(
+                    self.spark,
+                    self.t_seen.read(self.spark).select("url_hash"),
+                    newest_round=max(r for _, r in live),
+                )
+            elif delta:
+                paths = [os.path.join(self.t_seen.path, d) for d, _ in delta]
+                self.bloom.add_hashes(
+                    self.spark,
+                    self.spark.read.schema(_state_struct()).parquet(*paths)
+                    .select("url_hash"),
+                    newest_round=max(r for _, r in delta),
+                )
+            self._bloom_built = True
+            self._bloom_synced_round = rnd
         _tr("bloom")
 
         # -- metrics (driver-side pyarrow append — no Spark job) ------------
@@ -835,7 +827,7 @@ class CrawlEngine:
                 "frontier_count": self._frontier_count,
                 "bloom_built": self._bloom_built,
                 "bloom_synced_round": self._bloom_synced_round,
-                "bloom_m_buckets": self.bloom.m_buckets,
+                "bloom_segments": self.bloom.segments,
                 "adaptive_last_round": self._adaptive_last_round,
                 "wall_s": time.monotonic() - t0,
                 "tables": {

@@ -19,9 +19,13 @@ as DataFrame pipelines over seed tables:
 from __future__ import annotations
 
 import fnmatch
+import re
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import StringType
 
 # junk suffixes/patterns the reference's _is_nonsense_url drops
 _NONSENSE_EXT = (
@@ -34,6 +38,28 @@ _NONSENSE_PATTERNS = [
 ]
 
 
+# the five predefined XML entities plus decimal/hex character references
+_XML_ENTITY = re.compile(r"&(lt|gt|quot|apos|amp|#[0-9]+|#[xX][0-9a-fA-F]+);")
+_NAMED_ENTITY = {"lt": "<", "gt": ">", "quot": '"', "apos": "'", "amp": "&"}
+
+
+def _decode_entity(m: re.Match) -> str:
+    ref = m.group(1)
+    if ref[0] != "#":
+        return _NAMED_ENTITY[ref]
+    code = int(ref[2:], 16) if ref[1] in "xX" else int(ref[1:])
+    if 0 < code <= 0x10FFFF and not 0xD800 <= code <= 0xDFFF:
+        return chr(code)
+    return m.group(0)  # not a character: keep the reference as written
+
+
+@pandas_udf(StringType())
+def _decode_xml_entities(urls: pd.Series) -> pd.Series:
+    """One left-to-right pass, as an XML parser decodes: a decoded '&'
+    never starts another reference ('&amp;#38;' -> '&#38;')."""
+    return urls.str.replace(_XML_ENTITY, _decode_entity, regex=True)
+
+
 def seeds_from_sitemaps(sitemap_bodies: DataFrame, body_col: str = "body") -> DataFrame:
     """sitemap XML bodies -> one row per <loc> URL. Nested sitemap
     indexes resolve by feeding their <loc>s back through the fetch
@@ -44,16 +70,13 @@ def seeds_from_sitemaps(sitemap_bodies: DataFrame, body_col: str = "body") -> Da
         "'<loc>\\\\s*(?:<!\\\\[CDATA\\\\[)?\\\\s*([^<\\\\]]+?)"
         "\\\\s*(?:\\\\]\\\\]>)?\\\\s*</loc>', 1)"
     )).alias("url")
-    # sitemap XML must escape '&' as '&amp;' — the reference's XML
-    # parser (async_url_seeder.py:865-907) decodes entities and CDATA;
-    # without this, any URL with two query params comes out with a
-    # literal '&amp;' and never joins against its crawled url_norm
-    ent = F.col("url")
-    # '&amp;' decodes LAST or '&amp;lt;' would double-decode
-    for enc, dec in (("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'),
-                     ("&apos;", "'"), ("&#39;", "'"), ("&amp;", "&")):
-        ent = F.replace(ent, F.lit(enc), F.lit(dec))
-    return sitemap_bodies.select(loc).select(ent.alias("url")).distinct()
+    # sitemap XML must escape '&' as '&amp;' (or '&#38;') — the
+    # reference's XML parser (async_url_seeder.py:865-907) decodes
+    # entities and CDATA; without this, any URL with two query params
+    # comes out with a literal '&amp;' and never joins against its
+    # crawled url_norm
+    return sitemap_bodies.select(loc).select(
+        _decode_xml_entities(F.col("url")).alias("url")).distinct()
 
 
 def drop_nonsense_urls(urls: DataFrame, url_col: str = "url") -> DataFrame:

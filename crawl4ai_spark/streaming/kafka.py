@@ -42,19 +42,22 @@ def _to_plain(v, integral: bool = False):
     silently UNWRAP size 1), structs as dicts, and a null in a numeric
     column turns the whole column float64 with NaN — NaN must become
     JSON null (the bare token ``NaN`` is not JSON), and an integral
-    column's values must serialize as ints again, not 5.0."""
+    column's values must serialize as ints again, not 5.0. The same
+    holds inside an array<integral> (a null element anywhere in the
+    batch turns every row's elements float64), so ``integral`` carries
+    into array elements."""
     if v is None or (isinstance(v, float) and v != v):
         return None
     if isinstance(v, dict):
         return {k: _to_plain(x) for k, x in v.items()}
     if hasattr(v, "tolist") and getattr(v, "ndim", 0):
-        return [_to_plain(x) for x in v.tolist()]
+        return [_to_plain(x, integral) for x in v.tolist()]
     if hasattr(v, "item"):
         v = v.item()
     if integral and isinstance(v, float):
         return int(v)
     if isinstance(v, (list, tuple)):
-        return [_to_plain(x) for x in v]
+        return [_to_plain(x, integral) for x in v]
     return v
 
 
@@ -85,13 +88,16 @@ def kafka_messages(df: DataFrame, topic: str, key_col: str,
     Null keys and serialization failures drop the row (producer.py's
     KeyError / TypeError skip paths) — the rest of the batch survives.
     """
-    from pyspark.sql.types import BooleanType, ByteType, IntegerType, \
-        LongType, ShortType
+    from pyspark.sql.types import ArrayType, BooleanType, IntegralType
+
+    def is_integral(t) -> bool:
+        while isinstance(t, ArrayType):
+            t = t.elementType
+        return isinstance(t, IntegralType)
 
     integral = frozenset(
         f.name for f in df.select(*value_cols).schema.fields
-        if isinstance(f.dataType, (ByteType, ShortType, IntegerType,
-                                   LongType))
+        if is_integral(f.dataType)
     )
     key_expr = F.col(key_col)
     if isinstance(df.schema[key_col].dataType, BooleanType):

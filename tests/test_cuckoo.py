@@ -5,10 +5,13 @@ Contract pinned here:
   - NO FALSE NEGATIVES, even past capacity: a failed eviction chain
     stashes a sentinel that keeps the displaced key's membership.
   - FP budget: 16-bit fingerprints put design FP around 2*4/2^16
-    (~1.2e-4); the test allows 1e-3.
-  - an overfilled filter spills into the stash; the state-sized
-    rebuild the engine runs when seen outgrows capacity() empties it.
-  - deletion removes membership without touching other keys.
+    (~1.2e-4) per segment; the test allows 1e-3.
+  - the filter is append-only: each sync appends one segment sized for
+    its own keys, so one shard can hold segments of different sizes,
+    each probed with its own m; FP adds up across segments, and the
+    merge build that replaces them restores the single-filter budget.
+  - TTL expiry drops a segment only once its newest round expired; a
+    partly expired segment stays, its stale keys being false positives.
   - blobs never ride through the driver (static check).
   - determinism: same deltas in the same order -> byte-identical blobs.
   - engine equivalence: a crawl whose filter lags the seen table by
@@ -27,6 +30,7 @@ from pyspark.sql import functions as F
 
 from crawl4ai_spark.engine import cuckoo as cuckoo_mod
 from crawl4ai_spark.engine.cuckoo import (
+    MAX_SEGMENTS,
     SLOTS,
     TARGET_LOAD,
     CuckooSeenSet,
@@ -59,8 +63,9 @@ def test_no_false_negatives_and_fp_budget(spark, tmp_path):
     t = SnapshotTable(str(tmp_path / "ck"))
     c = CuckooSeenSet(t, n_shards=n_shards)
     keys = _hashes(spark, 0, n_keys)
-    c.build(spark, keys, expected_n=n_keys, headroom=1.0)
-    assert c.capacity() >= n_keys
+    c.build(spark, keys, newest_round=0)
+    for r in t.read(spark).collect():  # each shard sized for its own keys
+        assert r.m_buckets * SLOTS * TARGET_LOAD >= r.n_items
 
     probed = c.probe(spark, keys)
     assert probed.where(~F.col("maybe_seen")).count() == 0
@@ -70,56 +75,83 @@ def test_no_false_negatives_and_fp_budget(spark, tmp_path):
     assert fp / n_probe < 1e-3, fp
 
     extra = _hashes(spark, 10**6, 500)
-    c.add_hashes(spark, extra)
+    c.add_hashes(spark, extra, newest_round=1)
     assert c.probe(spark, extra).where(~F.col("maybe_seen")).count() == 0
-
-
-def _stash_total(c, spark):
-    return sum(len(r.stash) // 8 for r in c.table.read(spark).collect())
+    assert probed.where(~F.col("maybe_seen")).count() == 0
 
 
 def test_rebuild_restores_fp_budget(spark, tmp_path):
-    """Overfilling an undersized filter pushes it past capacity() and
-    spills fingerprints into the stash (probe cost degrades toward an
-    exact check); a state-sized rebuild — what the engine does at the
-    round boundary when seen outgrows capacity — empties the stash and
-    keeps FP within budget. Membership holds throughout."""
+    """Every live segment adds its own FP rate, so a filter of
+    MAX_SEGMENTS small segments reports more false positives than one
+    filter of the same keys; the merge build the engine runs past
+    MAX_SEGMENTS replaces them with one segment and restores the
+    single-filter budget. Membership holds throughout."""
     t = SnapshotTable(str(tmp_path / "ck"))
     c = CuckooSeenSet(t, n_shards=1)
-    n = 4_400
+    per, n_probe = 2_000, 100_000
+    n = per * MAX_SEGMENTS
     keys = _hashes(spark, 0, n)
-    fresh = _hashes(spark, n, 20_000)
-    # deliberately undersized (expected_n lied low, floor size kicks in)
-    c.build(spark, keys, expected_n=100, headroom=1.0)
-    assert n > c.capacity()
-    assert _stash_total(c, spark) > 0
+    fresh = _hashes(spark, n, n_probe)
+    for k in range(MAX_SEGMENTS):
+        c.add_hashes(spark, _hashes(spark, k * per, per), newest_round=k)
+    assert len(c.segments) == len(t.snapshot_data()) == MAX_SEGMENTS
     assert c.probe(spark, keys).where(~F.col("maybe_seen")).count() == 0
+    fp_many = c.probe(spark, fresh).where("maybe_seen").count()
 
-    c.build(spark, keys, expected_n=n, headroom=1.0)  # the rebuild path
-    assert n <= c.capacity()
-    assert _stash_total(c, spark) == 0
+    c.build(spark, keys, newest_round=MAX_SEGMENTS - 1)  # the merge
+    assert len(c.segments) == len(t.snapshot_data()) == 1
     assert c.probe(spark, keys).where(~F.col("maybe_seen")).count() == 0
-    fp = c.probe(spark, fresh).where("maybe_seen").count() / 20_000
-    assert fp <= 1e-3, fp
+    fp_one = c.probe(spark, fresh).where("maybe_seen").count()
+    assert fp_one < fp_many, (fp_one, fp_many)
+    assert fp_one / n_probe <= 1e-3, fp_one
 
 
-def test_delete_removes_membership(spark, tmp_path):
+def test_ttl_drops_only_fully_expired_segments(spark, tmp_path):
+    """expire(cutoff) drops a segment only when its newest round is at
+    or below the cutoff. A segment holding an expired and a live round
+    stays: its expired keys are false positives (the engine's exact
+    anti-join absorbs them) and its live keys keep membership."""
     t = SnapshotTable(str(tmp_path / "ck"))
     c = CuckooSeenSet(t, n_shards=4)
-    keys = _hashes(spark, 0, 5_000)
-    c.build(spark, keys, expected_n=5_000)
+    r0, r1, r2, r3 = (_hashes(spark, k * 3_000, 3_000) for k in range(4))
+    c.build(spark, r0, newest_round=0)
+    old_dir = c.segments[0][0]
+    c.add_hashes(spark, r1.unionByName(r2), newest_round=2)
+    c.add_hashes(spark, r3, newest_round=3)
 
-    gone = keys.where(F.xxhash64(F.col("url_hash").cast("string")) % 10 == 0)
-    kept = keys.subtract(gone)
-    n_gone = gone.count()
-    assert 0 < n_gone < 5_000
-    c.delete_hashes(spark, gone)
+    c.expire(1)  # rounds 0 and 1 expired
+    assert [r for _, r in c.segments] == [2, 3]
+    assert old_dir not in t.snapshot_data()
+    assert [d for d, _ in c.segments] == t.snapshot_data()
+    for live in (r2, r3):
+        assert c.probe(spark, live).where(~F.col("maybe_seen")).count() == 0
+    # round 1 rides in the kept segment: still reported (stale FPs)
+    assert c.probe(spark, r1).where(~F.col("maybe_seen")).count() == 0
+    # round 0's segment is gone: its keys hit only at the FP floor
+    assert c.probe(spark, r0).where("maybe_seen").count() <= 3
 
-    # deleted keys drop out (allowing the filter's own FP rate on the
-    # re-probe); untouched keys never lose membership
-    still = c.probe(spark, gone).where(F.col("maybe_seen")).count()
-    assert still <= max(2, int(n_gone * 1e-2)), still
-    assert c.probe(spark, kept).where(~F.col("maybe_seen")).count() == 0
+    c.expire(3)
+    assert c.segments == [] and t.read(spark) is None
+
+
+def test_mixed_m_segments_probe(spark, tmp_path):
+    """Segments are sized for their own delta, so one shard carries
+    rows of different m_buckets; the probe must check each row with
+    its own m (one shared m would send keys to the wrong buckets)."""
+    t = SnapshotTable(str(tmp_path / "ck"))
+    c = CuckooSeenSet(t, n_shards=2)
+    small, big = _hashes(spark, 0, 500), _hashes(spark, 10**6, 40_000)
+    c.build(spark, small, newest_round=0)
+    c.add_hashes(spark, big, newest_round=1)
+    by_shard: dict = {}
+    for r in t.read(spark).select("shard_id", "m_buckets").collect():
+        by_shard.setdefault(r.shard_id, set()).add(r.m_buckets)
+    assert by_shard and all(len(ms) == 2 for ms in by_shard.values()), by_shard
+    both = small.unionByName(big)
+    assert c.probe(spark, both).where(~F.col("maybe_seen")).count() == 0
+    fp = c.probe(spark, _hashes(spark, 5 * 10**6, 20_000)).where(
+        "maybe_seen").count()
+    assert fp / 20_000 < 1e-3, fp
 
 
 def test_overflow_stash_prevents_false_negatives():
@@ -140,9 +172,8 @@ def test_deterministic_blobs(spark, tmp_path):
     def run(sub):
         t = SnapshotTable(str(tmp_path / sub))
         c = CuckooSeenSet(t, n_shards=4)
-        c.build(spark, _hashes(spark, 0, 3_000), expected_n=3_000)
-        c.add_hashes(spark, _hashes(spark, 50_000, 700))
-        c.delete_hashes(spark, _hashes(spark, 100, 200))
+        c.build(spark, _hashes(spark, 0, 3_000), newest_round=0)
+        c.add_hashes(spark, _hashes(spark, 50_000, 700), newest_round=1)
         return sorted(
             (r.shard_id, bytes(r.table), bytes(r.stash))
             for r in c.table.read(spark).collect()
@@ -197,23 +228,52 @@ def test_cuckoo_engine_run_matches_bloom_and_exact(spark, tmp_path):
     assert got_lag == got_sync == got_off
 
 
+def test_engine_merges_past_max_segments(spark, tmp_path, monkeypatch):
+    """Once MAX_SEGMENTS segments are live, the engine's next non-empty
+    sync rebuilds one segment from the live seen table instead of
+    appending: the live count never passes the cap, and the crawl still
+    equals the exact-only run (no false negative from the merge)."""
+    from crawl4ai_spark.engine import frontier as frontier_mod
+
+    monkeypatch.setattr(frontier_mod, "MAX_SEGMENTS", 2)
+    builds = []
+    real_build = CuckooSeenSet.build
+
+    def counting_build(self, *a, **kw):
+        builds.append(kw.get("newest_round"))
+        return real_build(self, *a, **kw)
+
+    monkeypatch.setattr(CuckooSeenSet, "build", counting_build)
+    # depth 4: the filter builds at round 1, round 2 appends a second
+    # segment, round 3 finds the cap reached and merges
+    eng, got = _crawl(spark, tmp_path / "merge",
+                      _cfg(max_depth=4, bloom_min_seen=5))
+    assert len(builds) >= 2, builds  # the engage build, then a merge
+    assert 1 <= len(eng.bloom.segments) <= 2
+    assert [d for d, _ in eng.bloom.segments] == eng.t_bloom.snapshot_data()
+    monkeypatch.undo()
+    _, want = _crawl(spark, tmp_path / "off",
+                     _cfg(max_depth=4, bloom_min_seen=EXACT_ONLY))
+    assert got == want
+
+
 def test_add_hashes_bootstraps_empty_table(spark, tmp_path):
-    """add_hashes with no prior shards falls back to build(expected_n=1);
-    size_buckets must not crash on tiny expected counts (the 1<<ceil(
-    log2(x<1)) negative-shift hazard) and membership must hold."""
+    """add_hashes on an empty table writes the first segment; shards
+    of a few keys each must size without crashing (size_buckets'
+    1<<ceil(log2(x<1)) negative-shift hazard) and membership must hold."""
     assert size_buckets(1, 32) >= 1 << 10
     assert size_buckets(4, 32) >= 1 << 10
     t = SnapshotTable(str(tmp_path / "ck"))
     c = CuckooSeenSet(t, n_shards=4)
     keys = _hashes(spark, 0, 50)
-    c.add_hashes(spark, keys)  # empty-table bootstrap path
+    c.add_hashes(spark, keys, newest_round=0)  # empty-table bootstrap path
     assert c.probe(spark, keys).where(~F.col("maybe_seen")).count() == 0
 
 
 def test_resume_with_missing_filter_table(spark, tmp_path):
     """A checkpoint that says the filter is built, resumed against a
-    missing filter table (or, as a manifest written before m_buckets
-    was recorded, without the filter's size) must NOT trust the flag:
+    missing filter table (or, as a manifest written before segments
+    were recorded, without the filter's segments) must NOT trust the flag:
     an empty filter would mark every synced URL definitely-new and
     mass re-crawl. The guard falls back to exact-only dedup, so the
     crawled multiset equals a straight-through run's."""
@@ -236,7 +296,7 @@ def test_resume_with_missing_filter_table(spark, tmp_path):
     manifest = tmp_path / "y" / "round_manifest.json"
     rounds = json.loads(manifest.read_text())
     for r in rounds:
-        del r["bloom_m_buckets"]
+        del r["bloom_segments"]
     manifest.write_text(json.dumps(rounds))
     _, got = _crawl(spark, tmp_path / "y", cfg)
     assert got == want

@@ -98,6 +98,18 @@ def test_wire_bytes_arrays_nulls_and_bool_keys(spark, tmp_path):
     assert keys == {b"True", b"False"}
 
 
+def test_array_long_with_null_keeps_ints(spark):
+    """A null element in an array<long> column turns every row's
+    elements float64 on the Arrow->pandas hop; the wire must still
+    carry ints (and null for the null), in every row of the batch."""
+    df = spark.createDataFrame(
+        [("u1", [1, None, 3]), ("u2", [4])],
+        "url string, ids array<long>").coalesce(1)
+    rows = {bytes(r.key): bytes(r.value) for r in
+            kafka_messages(df, "t", "url", ["ids"]).collect()}
+    assert rows == {b"u1": b'{"ids": [1, null, 3]}', b"u2": b'{"ids": [4]}'}
+
+
 def test_null_bool_key_skipped(spark):
     """A NULL boolean key drops the row like any null key; it must not
     serialize as b"False"."""

@@ -7,13 +7,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import functions as F
 
-from crawl4ai_spark.engine.cuckoo import (
-    CuckooSeenSet,
-    compact_stash,
-    delete_keys,
-    insert_keys,
-    probe_keys,
-)
+from crawl4ai_spark.engine.cuckoo import CuckooSeenSet
 from crawl4ai_spark.engine.frontier import _round_of_dir
 from crawl4ai_spark.engine.tables import SnapshotTable
 from crawl4ai_spark.ops.adaptive import consistency_score
@@ -73,31 +67,13 @@ def test_gopher_stop_words_survive_case_and_punctuation(spark):
     assert row["keep"] is True
 
 
-# -- cuckoo: stash compaction reclaims sentinels after deletes ----------------
-
-def test_compact_stash_rehomes_after_deletes():
-    rng = np.random.RandomState(7)
-    keys = rng.randint(-2**62, 2**62, size=24, dtype=np.int64)
-    m = 2  # 2 buckets x 4 slots = 8 table slots -> heavy overflow
-    table = np.zeros((m, 4), dtype=np.uint16)
-    stash: list[int] = []
-    insert_keys(table, stash, keys, m)
-    assert len(stash) > 0
-    assert probe_keys(table, np.asarray(stash, np.int64), keys, m).all()
-
-    delete_keys(table, keys[:6], m)
-    survivors = keys[6:]
-    before = len(stash)
-    stash2 = compact_stash(table, stash, m)
-    assert len(stash2) < before  # freed slots absorbed sentinels
-    # no false negatives for surviving keys
-    assert probe_keys(table, np.asarray(stash2, np.int64), survivors, m).all()
-
+# -- cuckoo: TTL churn keeps the stash bounded --------------------------------
 
 def test_cuckoo_ttl_churn_keeps_stash_bounded(spark, tmp_path):
-    # sized-for-1k filter fed 3 insert/delete waves of 2k keys: without
-    # compaction the stash only grows; with it, churn stays bounded and
-    # membership stays exact for live keys
+    # 3 add+expire waves of 1k keys: each wave appends a segment sized
+    # for its own keys and expires the previous wave's whole segment,
+    # so the stash cannot accumulate across waves, and membership stays
+    # exact for live keys
     t = SnapshotTable(str(tmp_path / "ck_churn"))
     c = CuckooSeenSet(t, n_shards=4)
 
@@ -105,42 +81,20 @@ def test_cuckoo_ttl_churn_keeps_stash_bounded(spark, tmp_path):
         return spark.range(start, start + n).select(
             F.xxhash64(F.col("id").cast("string")).alias("url_hash"))
 
-    c.build(spark, hashes(0, 1000), expected_n=1000, headroom=1.0)
+    c.build(spark, hashes(0, 1000), newest_round=0)
     for wave in range(1, 4):
-        c.add_hashes(spark, hashes(wave * 1000, 1000))
-        c.delete_hashes(spark, hashes((wave - 1) * 1000, 1000))
+        c.add_hashes(spark, hashes(wave * 1000, 1000), newest_round=wave)
+        c.expire(wave - 1)
+    assert [r for _, r in c.segments] == [3]
+    assert [d for d, _ in c.segments] == t.snapshot_data()
     live = hashes(3000, 1000)
     assert c.probe(spark, live).where(~F.col("maybe_seen")).count() == 0
     shards = t.read(spark).collect()
     total_stash = sum(
         len(np.frombuffer(r["stash"], dtype=np.int64)) for r in shards)
-    # bounded: a small multiple of the per-shard compaction threshold
+    # bounded: at most 32 sentinels per shard
     assert total_stash <= 4 * 32, total_stash
 
-
-# -- cuckoo: missing-shard sizing follows stored shards, not driver state -----
-
-def test_add_hashes_derives_m_from_stored_shards(spark, tmp_path):
-    t = SnapshotTable(str(tmp_path / "ck_m"))
-    c1 = CuckooSeenSet(t, n_shards=4)
-    c1.build(spark, spark.range(500).select(
-        F.xxhash64(F.col("id").cast("string")).alias("url_hash")),
-        expected_n=500, headroom=1.0)
-    stored_m = c1.m_buckets
-
-    # a fresh handle whose driver mirror diverged (e.g. a stale restore)
-    c2 = CuckooSeenSet(t, n_shards=4, m_buckets=stored_m * 8)
-    c2.add_hashes(spark, spark.range(500, 600).select(
-        F.xxhash64(F.col("id").cast("string")).alias("url_hash")))
-    ms = {r["m_buckets"] for r in t.read(spark).select("m_buckets").collect()}
-    assert ms == {stored_m}  # uniform, matching the stored layout
-    assert c2.m_buckets == stored_m  # mirror re-synced
-    allk = spark.range(600).select(
-        F.xxhash64(F.col("id").cast("string")).alias("url_hash"))
-    assert c2.probe(spark, allk).where(~F.col("maybe_seen")).count() == 0
-
-
-# -- incremental_dedup exposes its cache handle --------------------------------
 
 def test_incremental_dedup_cache_release(spark):
     from crawl4ai_spark.ops.dedup import incremental_dedup, minhash_index

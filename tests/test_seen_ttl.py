@@ -4,9 +4,10 @@ Contract pinned here:
   - expiry is a metadata-only dir drop on the round-partitioned seen
     table (no rewrite): an expired URL rediscovered via links is
     crawled AGAIN; without TTL every URL is crawled exactly once.
-  - the expired hashes are deleted from the cuckoo filter shards; the
-    recrawl semantics equal an exact-only run's (exactness never
-    depends on the pre-filter).
+  - the cuckoo filter drops every segment whose newest round expired,
+    also metadata only; a partly expired segment's stale keys are false
+    positives, so the recrawl semantics equal an exact-only run's
+    (exactness never depends on the pre-filter).
   - a killed run resumes onto the post-expiry snapshot.
 """
 
@@ -77,11 +78,14 @@ def test_no_ttl_crawls_each_url_once(spark, tmp_path):
 
 
 def test_ttl_with_bloom_backend_same_semantics(spark, tmp_path):
-    """With the filter engaged, TTL expiry deletes the expired hashes
-    from the cuckoo shards; the recrawl semantics must equal an
+    """With the filter engaged, TTL expiry drops the expired segments
+    from the cuckoo filter; the recrawl semantics must equal an
     exact-only run's."""
+    engines = []
+
     def crawled(subdir, **kw):
         eng = _crawl(spark, tmp_path, subdir, seen_ttl_rounds=2, **kw)
+        engines.append(eng)
         return sorted(
             (r.url_norm, r.depth)
             for r in eng.t_pages.read(spark)
@@ -89,6 +93,10 @@ def test_ttl_with_bloom_backend_same_semantics(spark, tmp_path):
         )
 
     assert crawled("ck") == crawled("off", min_seen=EXACT_ONLY)
+    eng = engines[0]
+    cutoff = eng.wh.last_committed_round() - 2
+    assert all(r > cutoff for _, r in eng.bloom.segments), eng.bloom.segments
+    assert [d for d, _ in eng.bloom.segments] == eng.t_bloom.snapshot_data()
 
 
 def test_ttl_resume_after_kill(spark, tmp_path):
@@ -121,10 +129,10 @@ def test_ttl_resume_after_kill(spark, tmp_path):
 
 def test_ttl_with_lagged_sync_stays_exact(spark, tmp_path):
     """With bloom_sync_rounds > 1 the filter lags the seen table, so
-    TTL expiry sees dirs whose hashes were never inserted; deleting
-    those could strip a live key's colliding fingerprint (a false
-    negative). The delete is restricted to synced rounds — the crawled
-    multiset must equal the filter-free run's under the same ttl."""
+    TTL expiry sees dirs whose hashes were never inserted, and a
+    segment can span expired and live rounds; it is dropped only once
+    its newest round expires. The crawled multiset must equal the
+    filter-free run's under the same ttl."""
     def crawled(subdir, **kw):
         eng = _crawl(spark, tmp_path, subdir, seen_ttl_rounds=1,
                      sync_rounds=3, **kw)

@@ -324,3 +324,19 @@ def test_seeder_hardening_round5(spark):
         "url string, head string")
     rows = seed_pipeline(dup).collect()
     assert len(rows) == 1 and rows[0].head == "aa head"
+
+
+def test_sitemap_numeric_char_refs(spark):
+    """<loc> decodes decimal and hex character references like any
+    XML parser, in one pass: an escaped reference ('&amp;#38;')
+    decodes once, to its literal text."""
+    from crawl4ai_spark.sources.seeder import seeds_from_sitemaps
+
+    refs = ("https://x.test/d?a=1&#38;b=2", "https://x.test/e?a=1&#x26;b=2",
+            "https://x.test/f?q=caf&#233;", "https://x.test/g?a=&amp;#38;")
+    body = "<urlset>" + "".join(
+        f"<url><loc>{u}</loc></url>" for u in refs) + "</urlset>"
+    got = {r.url for r in seeds_from_sitemaps(
+        spark.createDataFrame([(body,)], "body string")).collect()}
+    assert got == {"https://x.test/d?a=1&b=2", "https://x.test/e?a=1&b=2",
+                   "https://x.test/f?q=café", "https://x.test/g?a=&#38;"}

@@ -147,7 +147,7 @@ def main() -> None:
     wh = Warehouse(tempfile.mkdtemp(prefix="c4as_stress_"))
     cuckoo = CuckooSeenSet(wh.table("seen_cuckoo"), n_shards=32)
     t0 = time.monotonic()
-    cuckoo.build(spark, frontier.select("url_hash"), expected_n=n_actual)
+    cuckoo.build(spark, frontier.select("url_hash"), newest_round=0)
     build_s = time.monotonic() - t0
     shards = cuckoo.table.read(spark).select(
         "shard_id",
