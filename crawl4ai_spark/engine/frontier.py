@@ -1,29 +1,52 @@
 """The batch-iterative crawl loop — the engine core.
 
-One round == TWO Spark jobs (the Spark re-expression of
+One round == TWO writes (the Spark re-expression of
 BFSDeepCrawlStrategy._arun_batch, /root/reference/crawl4ai/deep_crawling/
 bfs_strategy.py:142-192, and BestFirstCrawlingStrategy._arun_best_first,
 bff_strategy.py:129-213):
 
-  job 1  PAGES: politeness/fairness windows select this round's fetch
-         set -> robots gate -> fetch -> extract (one Arrow pass) ->
-         append to `pages`. An attached Observation yields the round's
-         success/failure counts and fetch-latency p50 inside the write;
-         a per-partition accumulator in the extract stage yields the
-         fetch-metric lineage rows. No counting jobs.
-  job 2  STATE: link discovery (explode -> canonicalize -> filter ->
-         score -> seen anti-join -> capacity cap) and the round-close
-         state transition written as ONE tagged, partitioned write:
-           tag=n  new frontier candidates (these SAME files are also
-                  the seen-set delta — the seen table adopts them)
-           tag=d  deferred (politeness) + rate-limit retries
-           tag=h  per-host budget recurrence
-         The frontier table adopts {n,d}, seen appends {n}, host_state
-         adopts {h} — three tables, one job, zero data rewrites
-         (Iceberg AppendFiles semantics, tables.adopt_dirs). An
-         Observation on the write yields the new-candidate count and
-         next-round frontier size, so the next round needs neither
-         isEmpty() nor count().
+  write 1  PAGES: politeness/fairness windows select this round's fetch
+           set -> robots gate -> fetch -> extract (one Arrow pass) ->
+           append to `pages`. An attached Observation yields the
+           round's success/failure counts and fetch-latency p50 inside
+           the write; a per-partition accumulator in the extract stage
+           yields the fetch-metric lineage rows. No counting jobs.
+  write 2  STATE: link discovery (explode -> canonicalize -> filter ->
+           score -> seen anti-join -> capacity cap) and the round-close
+           state transition written as ONE tagged, partitioned write:
+             tag=n  new frontier candidates (these SAME files are also
+                    the seen-set delta — the seen table adopts them)
+             tag=d  deferred (politeness) + rate-limit retries
+             tag=h  per-host budget recurrence
+           The frontier table adopts {n,d}, seen appends {n}, host_state
+           adopts {h} — three tables, zero data rewrites (Iceberg
+           AppendFiles semantics, tables.adopt_dirs). An Observation on
+           the write yields the new-candidate count, the next frontier's
+           size and minimum depth, and the new host_state's minimum
+           budget, so the next round needs neither isEmpty() nor count().
+
+Each write is one action but several Spark jobs: every broadcast
+exchange (host_state, the politeness over-budget hosts and winners,
+the corpus fetch join, the seen keys) and every shuffle stage AQE
+re-plans launches its own job, so a small round runs about 8-9 jobs in
+full. The round drops, at plan-build time, each branch that the last
+write's Observation proves yields no rows:
+
+  (a) politeness windows — when the frontier holds no more rows than
+      the smallest budget any host can have (min of base_host_budget
+      and the host_state budgets), no host can exceed its budget, so
+      select_fetch_batch runs without per-host budgets (the host_state
+      join, the fail_count drop, the memory gate and the best-first
+      global cap stay);
+  (b) link discovery — when min frontier depth + 1 > max_depth, every
+      discovered link is too deep, so write 2 carries only tag d/h;
+  (c) the seen anti-join — while nothing was ever added to seen.
+
+An unknown fact (a manifest written before they were recorded) plans
+the branch in full. Within a round, write 2 plans the rate-limit
+retries only when write 1's Observation counted a 429/503 page, and
+the politeness result is cached for write 2 only when it can hold
+deferred rows.
 
 Everything else is driver-side bookkeeping: metrics rows are written
 with pyarrow (no job), and the round manifest commit is a JSON rename.
@@ -193,7 +216,7 @@ _state_struct_cache = None
 def _round_of_dir(rel_dir: str) -> Optional[int]:
     """Round number of a seen-table data dir adopted from a per-round
     tagged state write (…/state/r000123/tag=n); None for non-round dirs
-    (the empty init snapshot's d-… dir)."""
+    (a d-… dir, e.g. the empty init snapshot older warehouses hold)."""
     for part in rel_dir.replace("\\", "/").split("/"):
         # r{rnd:06d} is a zero-padded MINIMUM: round >= 10^6 widens the
         # dir name, so parse 'r' + digits of any length >= 6 (an exact
@@ -247,7 +270,12 @@ class CrawlEngine:
         self._bloom_built = False
         self._bloom_synced_round = -1
         self._adaptive_last_round = -1
-        self._frontier_count: int | None = None  # from last write's Observation
+        # facts from the last state write's Observation (None = unknown):
+        # the frontier's row count and minimum depth, and the smallest
+        # budget in host_state
+        self._frontier_count: int | None = None
+        self._min_depth: int | None = None
+        self._min_host_budget: int | None = None
         self._scratch: list[DataFrame] = []      # persisted intermediates
         self.memory_gate = None
         if self.cfg.memory_adaptive is not None:
@@ -327,6 +355,8 @@ class CrawlEngine:
         self._seen_count = 0
         self._bloom_built = False
         self._bloom_synced_round = -1
+        self._min_depth = 0
+        self._min_host_budget = None
         # spread seeds before the normalize UDF: seed tables often arrive
         # in few partitions (one sitemap file, one export), which would
         # serialize canonicalization into one task
@@ -365,8 +395,10 @@ class CrawlEngine:
         # reference quirk kept: `visited` starts EMPTY — seeds enter the
         # seen set only when (re)discovered by link_discovery
         # (bfs_strategy.py:152-156), so a seed linked from a deeper page
-        # is re-crawled once, exactly like the reference.
-        self.t_seen.overwrite(frontier.limit(0))
+        # is re-crawled once, exactly like the reference. Emptying it is
+        # a metadata commit: nothing reads seen before round 0 adopts
+        # its first tag=n dir (rule c), which also pins its schema.
+        self.t_seen.rollback_to([])
 
     # ------------------------------------------------------------------
     def resume_or_init(self, seeds: list[str] | None,
@@ -403,6 +435,8 @@ class CrawlEngine:
             segments = []
         self.bloom.segments = segments or []
         self._frontier_count = last.get("frontier_count")
+        self._min_depth = last.get("min_depth")
+        self._min_host_budget = last.get("min_host_budget")
         self._adaptive_last_round = last.get("adaptive_last_round", -1)
         for name, tbl in [
             ("frontier", self.t_frontier), ("seen", self.t_seen),
@@ -588,10 +622,18 @@ class CrawlEngine:
         # MemoryError on a sustained over-threshold run.
         if self.memory_gate is not None and self.memory_gate.check(self.spark, rnd):
             global_budget = 0
+        # rule (a): a frontier no larger than the smallest budget any
+        # host has cannot put a host over budget — skip the windows
+        budgets = [cfg.base_host_budget]
+        if host_state is not None:
+            budgets.append(self._min_host_budget)
+        fits = (self._frontier_count is not None and None not in budgets
+                and self._frontier_count <= min(budgets))
+        base_budget = None if fits else cfg.base_host_budget
         marked = select_fetch_batch(
             live,
             host_state,
-            base_budget=cfg.base_host_budget,
+            base_budget=base_budget,
             global_budget=global_budget,
             fairness_rounds=cfg.fairness_rounds,
         )
@@ -599,16 +641,19 @@ class CrawlEngine:
         # async_dispatcher.py:70-72)
         marked = marked.where(F.coalesce(F.col("fail_count"), F.lit(0)) <= cfg.max_retries)
         # scratch state: cache (recompute-on-loss is fine, it's derived
-        # from the committed frontier) — job 1 reads `batch`, job 2 reads
-        # `deferred`; a parquet round-trip here would cost an extra job
-        marked = marked.persist()
+        # from the committed frontier) — write 1 reads `batch`, write 2
+        # reads `deferred`; a parquet round-trip here would cost an extra
+        # job. With neither a host budget nor a global cap every row is
+        # selected, `deferred` is empty, and the cache would be dead.
+        if base_budget is not None or global_budget is not None:
+            marked = marked.persist()
 
         batch = marked.where("selected")
         deferred = marked.where(~F.col("selected")).withColumn(
             "wait_rounds", F.col("wait_rounds") + 1
         )
 
-        # -- JOB 1: gate + fetch + extract + pages append ------------------
+        # -- WRITE 1: gate + fetch + extract + pages append ----------------
         carry = ["url_norm", "host", "depth", "parent_url", "score",
                  "priority", "retry_count", "status_code", "fetch_ms", "success"]
         fetch_cols = ["url_norm", "host", "depth", "parent_url",
@@ -664,6 +709,8 @@ class CrawlEngine:
             F.count(F.lit(1)).alias("n"),
             F.sum(F.when(~F.col("success"), 1).otherwise(0)).alias("n_failed"),
             F.expr("percentile_approx(fetch_ms, 0.5)").alias("p50"),
+            F.sum(F.when(F.col("status_code").isin(*RATE_LIMIT_CODES), 1)
+                  .otherwise(0)).alias("n_limited"),
         )
         _tr("plan_job1")
         self.t_pages.append(round_pages)
@@ -677,24 +724,22 @@ class CrawlEngine:
         # downstream re-reads the materialized round from parquet
         round_df = self.t_pages.read(self.spark).where(F.col("round") == rnd)
 
-        # -- JOB 2: discovery + tagged state write -------------------------
+        # -- WRITE 2: discovery + tagged state write -----------------------
         cands = self._discover(round_df, crawled, rnd)
 
-        retries = (
-            round_df.where(F.col("status_code").isin(*RATE_LIMIT_CODES))
-            .where(F.col("retry_count") < cfg.max_retries)
-            .select(
-                "url_norm", "depth", "parent_url", "score",
-                (F.col("retry_count") + 1).alias("retry_count"),
-                F.lit(0).alias("wait_rounds"),
+        d_rows = deferred.select(*[f for f, _ in FRONTIER_FIELDS])
+        if pm["n_limited"]:  # else no page of this round is retried
+            retries = (
+                round_df.where(F.col("status_code").isin(*RATE_LIMIT_CODES))
+                .where(F.col("retry_count") < cfg.max_retries)
+                .select(
+                    "url_norm", "depth", "parent_url", "score",
+                    (F.col("retry_count") + 1).alias("retry_count"),
+                    F.lit(0).alias("wait_rounds"),
+                )
             )
-        )
-
-        state = self._to_state(
-            self._frontier_row(retries).unionByName(
-                deferred.select(*[f for f, _ in FRONTIER_FIELDS])
-            )
-        ).withColumn("tag", F.lit("d"))
+            d_rows = self._frontier_row(retries).unionByName(d_rows)
+        state = self._to_state(d_rows).withColumn("tag", F.lit("d"))
         if cands is not None:
             # A seed stays out of `seen` (reference quirk), so one that
             # is deferred/retried (tag=d) can be rediscovered as a tag=n
@@ -731,6 +776,8 @@ class CrawlEngine:
             obs_state,
             F.sum(F.when(F.col("tag") == "n", 1).otherwise(0)).alias("n_new"),
             F.sum(F.when(F.col("tag").isin("n", "d"), 1).otherwise(0)).alias("n_frontier"),
+            F.min(F.when(F.col("tag").isin("n", "d"), F.col("depth"))).alias("min_depth"),
+            F.min(F.when(F.col("tag") == "h", F.col("budget"))).alias("min_budget"),
         )
         state_dir = self.wh.state_dir(rnd)
         _tr("plan_job2")
@@ -739,6 +786,9 @@ class CrawlEngine:
         sm = obs_state.get
         n_new = int(sm["n_new"] or 0)
         self._frontier_count = int(sm["n_frontier"] or 0)
+        self._min_depth = sm["min_depth"]
+        if sm["min_budget"] is not None:  # else host_state is unchanged
+            self._min_host_budget = int(sm["min_budget"])
         self._seen_count += n_new
 
         tag_dirs = self.wh.existing_tag_dirs(state_dir)
@@ -762,9 +812,9 @@ class CrawlEngine:
 
         # -- seen TTL expiry (recrawl scheduling; default off) --------------
         # The seen table holds exactly one round-stamped dir per round
-        # that found new URLs (plus the empty init snapshot), so expiry
-        # is a drop_dirs metadata commit — no job — and so is dropping
-        # the filter segments whose newest round expired with them.
+        # that found new URLs, so expiry is a drop_dirs metadata commit
+        # — no job — and so is dropping the filter segments whose
+        # newest round expired with them.
         # _seen_count intentionally keeps the pre-expiry total: it only
         # gates the pre-filter's engage threshold.
         if cfg.seen_ttl_rounds is not None:
@@ -825,6 +875,8 @@ class CrawlEngine:
                 "n_success": n_success,
                 "seen_count": self._seen_count,
                 "frontier_count": self._frontier_count,
+                "min_depth": self._min_depth,
+                "min_host_budget": self._min_host_budget,
                 "bloom_built": self._bloom_built,
                 "bloom_synced_round": self._bloom_synced_round,
                 "bloom_segments": self.bloom.segments,
@@ -901,9 +953,10 @@ class CrawlEngine:
         cfg = self.cfg
         if cfg.max_pages is not None and crawled >= cfg.max_pages:
             return None
-        if cfg.max_depth <= 0:
-            # every frontier row is at depth >= 0, so discovery can never
-            # admit a candidate — skip the pages re-scan entirely
+        if (self._min_depth or 0) + 1 > cfg.max_depth:
+            # rule (b): every page of this round is at least min_depth
+            # deep (an unknown min is 0), so no link can be admitted —
+            # skip the pages re-scan entirely
             return None
 
         links = (
@@ -965,7 +1018,8 @@ class CrawlEngine:
         # bloom_sync_rounds rounds by design) — so dedup is exact every
         # round while shard writes amortize.
         # (url_hash already computed in the dedup agg's select above)
-        seen = self.t_seen.read(self.spark)
+        # rule (c): nothing was ever added to seen — no anti-join
+        seen = self.t_seen.read(self.spark) if self._seen_count else None
         if self._bloom_built and seen is not None:
             probed = self.bloom.probe(self.spark, cands)
             fresh = probed.where(~F.col("maybe_seen")).drop("maybe_seen")

@@ -49,14 +49,14 @@ class SnapshotTable:
         # reads tables several times per round, so this is a real slice
         # of the per-round serial floor). First read infers and caches;
         # later reads pass the schema and skip footer I/O entirely.
-        # Every write path keeps the cache honest: overwrite() re-pins
-        # it to the new data's schema, append()/adopt_dirs() invalidate
-        # on mismatch (or on undeclared external data), and
-        # rollback_to()/append_rows() invalidate outright — so a schema
-        # evolution within the instance's lifetime (e.g. resuming a
-        # pre-upgrade warehouse, then appending new-schema rows) never
-        # reads through a stale schema that would silently drop the new
-        # columns.
+        # Every write path keeps the cache honest: overwrite() and an
+        # append or adopt into an empty table pin it to the new data's
+        # schema, append()/adopt_dirs() invalidate on mismatch (or on
+        # undeclared external data), and rollback_to()/append_rows()
+        # invalidate outright — so a schema evolution within the
+        # instance's lifetime (e.g. resuming a pre-upgrade warehouse,
+        # then appending new-schema rows) never reads through a stale
+        # schema that would silently drop the new columns.
         self._schema = None
 
     # -- manifest ----------------------------------------------------------
@@ -127,9 +127,11 @@ class SnapshotTable:
 
     def append(self, df: DataFrame) -> int:
         """Append-only fast path (Iceberg AppendFiles): no rewrite."""
-        if self._schema is not None and _nullable(df.schema) != self._schema:
-            self._schema = None  # mixed-schema dirs: re-infer on next read
         m = self._read_manifest()
+        if not m["data"]:
+            self._schema = _nullable(df.schema)  # table now holds exactly this data
+        elif self._schema is not None and _nullable(df.schema) != self._schema:
+            self._schema = None  # mixed-schema dirs: re-infer on next read
         rel = self._write_datadir(df)
         m = {"version": m["version"] + 1, "data": m["data"] + [rel]}
         self._commit(m)
@@ -147,14 +149,14 @@ class SnapshotTable:
         cache stays warm (the engine's tagged state write has a fixed
         one); without a declaration the cache is invalidated — a footer
         re-read beats a silently stale schema."""
-        if mode == "overwrite":
+        m = self._read_manifest()
+        if mode == "overwrite" or not m["data"]:
             self._schema = _nullable(schema) if schema is not None else None
         elif self._schema is not None and (
             schema is None or _nullable(schema) != self._schema
         ):
             self._schema = None
         rels = [os.path.relpath(d, self.path) for d in abs_dirs]
-        m = self._read_manifest()
         data = rels if mode == "overwrite" else m["data"] + rels
         m = {"version": m["version"] + 1, "data": data}
         self._commit(m)

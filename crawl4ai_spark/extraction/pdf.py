@@ -225,8 +225,31 @@ class PdfDocument:
         # each stream's extent (skipping matches that fall inside a
         # previously-identified payload), and pass 2 re-slices the
         # streams whose /Length only became resolvable once the whole
-        # object map existed.
-        pending: list[tuple[int, int, object]] = []
+        # object map existed. A stream that pass 1 cut short at an
+        # `endstream` inside its payload grows in pass 2, and the
+        # headers pass 1 read from the rest of that payload are data:
+        # only then does the file get rescanned with the resolved
+        # lengths.
+        pending = self._scan_pass(data, {})
+        lengths, grown = {}, False
+        for num, i, length, end in pending:
+            resolved = self.resolve(length)
+            if (isinstance(resolved, (int, float)) and resolved
+                    and data.find(b"endstream", i + int(resolved)) != -1):
+                lengths[i] = int(resolved)
+                self.streams[num] = data[i:i + lengths[i]]
+                grown |= i + lengths[i] > end
+        if grown:
+            self.objects.clear()
+            self.streams.clear()
+            self._scan_pass(data, lengths)
+
+    def _scan_pass(self, data: bytes, lengths: dict[int, int]) -> list:
+        """Fill the object and stream maps; `lengths` maps a payload
+        offset to its resolved length. Returns (object number, offset,
+        /Length, offset of the first `endstream`) of each stream whose
+        extent was only a provisional scan."""
+        pending: list[tuple[int, int, object, int]] = []
         skip_until = 0
         for m in _OBJ_RE.finditer(data):
             if m.start() < skip_until:
@@ -245,7 +268,9 @@ class PdfDocument:
                 elif data[i:i + 1] == b"\n":
                     i += 1
                 length = val.get("/Length", 0) if isinstance(val, dict) else 0
-                if isinstance(length, (int, float)) and length:
+                if i in lengths:
+                    raw = data[i:i + lengths[i]]
+                elif isinstance(length, (int, float)) and length:
                     raw = data[i:i + int(length)]
                     end = data.find(b"endstream", i + int(length))
                     if end == -1:  # damaged /Length: scan
@@ -257,15 +282,10 @@ class PdfDocument:
                     # referenced object is in the map
                     end = data.find(b"endstream", i)
                     raw = data[i:end].rstrip(b"\r\n")
-                    pending.append((num, i, length))
+                    pending.append((num, i, length, end))
                 self.streams[num] = raw
                 skip_until = max(skip_until, i + len(raw))
-        for num, i, length in pending:
-            resolved = self.resolve(length)
-            if isinstance(resolved, (int, float)) and resolved:
-                raw = data[i:i + int(resolved)]
-                if data.find(b"endstream", i + int(resolved)) != -1:
-                    self.streams[num] = raw
+        return pending
 
     def _find_trailer(self, data: bytes) -> dict:
         last = {}

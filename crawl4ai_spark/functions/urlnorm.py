@@ -179,12 +179,17 @@ def can_process_url(url: str) -> bool:
 # Vectorized Spark surface
 # --------------------------------------------------------------------------
 
-@pandas_udf(StringType())
-def _normalize_pair_udf(href: pd.Series, base: pd.Series) -> pd.Series:
+def _normalize_pair(href: pd.Series, base: pd.Series) -> pd.Series:
     return pd.Series(
         [normalize_url_for_deep_crawl(h, b) for h, b in zip(href, base)],
         dtype=object,
     )
+
+
+# nondeterministic: the optimizer copies a deterministic UDF into every
+# filter on its output that it pushes below the projection, which would
+# run the normalizer in a second Python stage
+_normalize_pair_udf = pandas_udf(_normalize_pair, StringType()).asNondeterministic()
 
 
 @pandas_udf(StringType())

@@ -350,3 +350,22 @@ def test_process_pdfs_contains_bad_rows(spark):
     out = process_pdfs(df).collect()
     assert {r.doc_id for r in out} <= {"g", "junk", "trunc"}
     assert any(r.doc_id == "g" and "good page" in r.raw_text for r in out)
+
+
+def test_lengthened_stream_drops_objects_inside_its_payload():
+    """A stream whose indirect /Length resolves past an `endstream`
+    inside its payload: object headers in the rest of that payload are
+    data, and must not replace the real objects defined before it."""
+    payload = b"BT endstream\n1 0 obj << /Type /Bogus >> endobj ET"
+    data = (b"%PDF-1.4\n"
+            b"1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj\n"
+            b"2 0 obj << /Type /Pages /Kids [] /Count 0 >> endobj\n"
+            b"4 0 obj << /Length 5 0 R >>\nstream\n" + payload
+            + b"\nendstream\nendobj\n"
+            b"5 0 obj %d endobj\n" % len(payload)
+            + b"trailer << /Root 1 0 R >>\n%%EOF\n")
+    doc = PdfDocument(data)
+    assert doc.objects[1].get("/Type") == "/Catalog", doc.objects[1]
+    assert doc.objects[5] == len(payload)
+    from crawl4ai_spark.extraction.pdf import Ref
+    assert doc.stream_data(Ref(4)) == payload
