@@ -13,24 +13,33 @@ routinely inflate a single sample 2-7x — BENCH.md's variance model):
 every headline query and both crawl benches take TWO samples with the
 min reported and BOTH disclosed in the `samples` field, and each
 sample is load-gated — if the 1-min loadavg exceeds
-$SPARK_GRAFT_LOAD_GATE (default 6.0) the sample waits, within a shared
-$SPARK_GRAFT_GATE_BUDGET-second budget (default 240), for the host to
-quiet down. Gate decisions (who waited, how long, the load seen) are
-logged into the JSON under `load_gate` so the record itself shows
-whether a number was taken under contention.
+$SPARK_GRAFT_LOAD_GATE (default 1.5 x the CPU count) the sample
+waits, within a shared $SPARK_GRAFT_GATE_BUDGET-second budget (default
+240), for the host to quiet down. Gate decisions (who waited, how
+long, the load seen) are logged into the JSON under `load_gate` so the
+record itself shows whether a number was taken under contention.
+
+Defaults fit the host: $SPARK_GRAFT_CPUS falls back to the CPUs this
+process may run on, the driver heap to half the physical RAM
+(session.default_driver_memory), and the JSON records all three
+derived values (cpus, driver_memory, load_gate.threshold).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
 import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-GATE_THRESHOLD = float(os.environ.get("SPARK_GRAFT_LOAD_GATE", "6.0"))
+from crawl4ai_spark.session import build_session, host_cpus, prewarm  # noqa: E402
+
+GATE_THRESHOLD = float(os.environ.get("SPARK_GRAFT_LOAD_GATE")
+                       or 1.5 * host_cpus())
 GATE_POLL_S = 5.0
 
 
@@ -88,6 +97,7 @@ def bench_crawl(spark, sf_dir: str, max_depth: int = 6) -> tuple[float, int]:
     stats = eng.run([seed_url()])
     wall = time.monotonic() - t0
     corpus.unpersist()
+    shutil.rmtree(wh.root, ignore_errors=True)
     return wall, stats["pages_crawled"]
 
 
@@ -96,7 +106,12 @@ def bench_crawl_mass(spark, sf_dir: str, replicas: int = 4) -> tuple[float, int]
     over a replicated corpus as frontier — politeness windows,
     robots-free fetch join, span extraction, pages persist, discovery +
     seen anti-join all run on a full-size frontier, the way production
-    rounds do. Returns (seconds, urls_processed)."""
+    rounds do. Returns (seconds, urls_processed), the latter counted by
+    the crawl (its successful pages), not assumed. The one definition of
+    the mass round: bench.py's crawl_mass_round and the spark-submit
+    scaling job (tools/cluster_scaling.py) both call it and time it
+    their own way; each call builds its inputs outside the timed
+    section and runs the round in a fresh warehouse."""
     from pyspark.sql import functions as F
 
     from crawl4ai_spark.corpus.webgen import build_corpus, replicate_docs, url_expr
@@ -112,7 +127,7 @@ def bench_crawl_mass(spark, sf_dir: str, replicas: int = 4) -> tuple[float, int]
     # seeds are INPUT (a production seed table is already materialized)
     seed_df = docs.select(
         url_expr(F.col("doc_id").cast("long")).alias("url")
-    ).repartition(32).persist()
+    ).repartition(int(spark.conf.get("spark.sql.shuffle.partitions"))).persist()
     seed_df.count()
     wh = Warehouse(tempfile.mkdtemp(prefix="c4as_mass_"))
     eng = CrawlEngine(
@@ -121,19 +136,17 @@ def bench_crawl_mass(spark, sf_dir: str, replicas: int = 4) -> tuple[float, int]
                     base_host_budget=n // 7 + 1, n_salts=8, max_rounds=1),
     )
     t0 = time.monotonic()
-    eng.run(seed_df=seed_df)
+    stats = eng.run(seed_df=seed_df)
     wall = time.monotonic() - t0
     corpus.unpersist()
     seed_df.unpersist()
-    return wall, n
+    shutil.rmtree(wh.root, ignore_errors=True)
+    return wall, stats["pages_crawled"]
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
-    from crawl4ai_spark.session import build_session, prewarm
-
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(host_cpus())
     spark = build_session(
         app_name="crawl4ai-spark-bench",
         master=f"local[{cpus}]",
@@ -143,8 +156,7 @@ def main() -> None:
     # pay the fresh-JVM costs (codegen/analyzer JIT, Python worker
     # pool, parquet committer classes) on a micro-job, not inside the
     # first timed sample — measured 69-109 s -> 39-53 s cold crawl
-    # (tools/cold_round_profile.py A/B, BENCH.md round 5); disclosed
-    # in the JSON as prewarm_s
+    # (BENCH.md round 5); disclosed in the JSON as prewarm_s
     t_pw = time.monotonic()
     prewarm(spark)
     prewarm_s = round(time.monotonic() - t_pw, 2)
@@ -239,6 +251,7 @@ def main() -> None:
         "crawl_urls_per_sec": round(mass_urls / mass_s, 2) if mass_s else None,
         "crawl_loop_urls_per_sec": round(crawl_pages / crawl_s, 2) if crawl_s else None,
         "cpus": int(cpus),
+        "driver_memory": spark.conf.get("spark.driver.memory"),
         "prewarm_s": prewarm_s,
         "load_gate": {
             "threshold": GATE_THRESHOLD,

@@ -157,7 +157,6 @@ class CrawlConfig:
     # back to clamp(intrinsic), like links without head_data. Takes
     # precedence over `scorer`.
     link_query: Optional[list[str]] = None
-    shuffle_partitions: Optional[int] = None
     # per-URL config routing (async_dispatcher.py:101-125): list of
     # config dicts with optional url_matcher globs; first match wins,
     # unmatched URLs are skipped. Pages carry the winning config_id.
@@ -381,13 +380,6 @@ class CrawlEngine:
                 "wait_rounds": F.lit(0),
             })
         )
-        # re-spread after the dedup shuffle: AQE would coalesce the
-        # (byte-small, row-expensive) frontier to one partition, making
-        # seeding AND round 0's scan serial — same parallelism floor as
-        # _run_round
-        df = df.repartition(
-            self.spark.sparkContext.defaultParallelism, F.col("url_norm")
-        )
         frontier = self._to_state(self._frontier_row(df))
         obs = Observation()
         self.t_frontier.overwrite(frontier.observe(obs, F.count(F.lit(1)).alias("n")))
@@ -406,9 +398,22 @@ class CrawlEngine:
         """Returns (next_round, pages_crawled_so_far); rolls tables back
         to the last committed round checkpoint if a crash left them
         ahead."""
+        tables = [
+            ("frontier", self.t_frontier), ("seen", self.t_seen),
+            ("pages", self.t_pages), ("host_state", self.t_host),
+            ("metrics", self.t_metrics), ("seen_bloom", self.t_bloom),
+        ] + self.adaptive_state.tables
         rounds = self.wh.read_rounds()
         committed = [r for r in rounds if r.get("committed")]
         if not committed:
+            # a crash before round 0's commit leaves the tables holding
+            # that attempt's rows (host_state even points into the state
+            # dir round 0 is about to overwrite): empty them with
+            # metadata commits, no Spark job
+            for _, tbl in tables:
+                if tbl.snapshot_data():
+                    tbl.rollback_to([])
+            self.bloom.segments = []
             if seed_df is not None:
                 self.init_from_seed_df(seed_df)
             else:
@@ -438,11 +443,7 @@ class CrawlEngine:
         self._min_depth = last.get("min_depth")
         self._min_host_budget = last.get("min_host_budget")
         self._adaptive_last_round = last.get("adaptive_last_round", -1)
-        for name, tbl in [
-            ("frontier", self.t_frontier), ("seen", self.t_seen),
-            ("pages", self.t_pages), ("host_state", self.t_host),
-            ("metrics", self.t_metrics), ("seen_bloom", self.t_bloom),
-        ] + self.adaptive_state.tables:
+        for name, tbl in tables:
             want = last["tables"].get(name)
             if want is not None and tbl.snapshot_data() != want:
                 tbl.rollback_to(want)
@@ -452,8 +453,6 @@ class CrawlEngine:
     def run(self, seeds: list[str] | None = None,
             seed_df: DataFrame | None = None) -> dict:
         cfg = self.cfg
-        start_round, crawled = self.resume_or_init(seeds, seed_df)
-        stats = {"rounds": 0, "pages_crawled": crawled}
         aqe_key = "spark.sql.adaptive.enabled"
         orig_aqe = self.spark.conf.get(aqe_key, "true")
         # AQE partition coalescing is byte-based and blind to per-row
@@ -464,13 +463,16 @@ class CrawlEngine:
         # explicit url_hash repartition established. Measured on a
         # 1.6M-URL round at 2 executors x 8 cores via spark-submit:
         # heavy stage 23 -> 64 tasks, cold round 329 s -> 137 s.
-        # Coalescing stays off for the whole engine loop (round shuffle
+        # Coalescing stays off for the whole engine loop, seed init
+        # included, so the seed dedup keeps its width too (round shuffle
         # widths are already bounded by n_part); skew-join splitting and
         # runtime broadcast — AQE's wins at scale — remain enabled.
         coal_key = "spark.sql.adaptive.coalescePartitions.enabled"
         orig_coal = self.spark.conf.get(coal_key, "true")
         try:
             self.spark.conf.set(coal_key, "false")
+            start_round, crawled = self.resume_or_init(seeds, seed_df)
+            stats = {"rounds": 0, "pages_crawled": crawled}
             for rnd in range(start_round, cfg.max_rounds):
                 if cfg.max_pages is not None and crawled >= cfg.max_pages:
                     break
@@ -574,18 +576,6 @@ class CrawlEngine:
     def _run_round(self, rnd: int, frontier: DataFrame, crawled_before: int) -> int:
         cfg = self.cfg
         t0 = time.monotonic()
-        # phase tracing (C4AS_TRACE=1): driver-side wall per round phase,
-        # for separating job time from plan-compile/commit gaps
-        if os.environ.get("C4AS_TRACE") == "1":
-            _last = [t0]
-
-            def _tr(label: str) -> None:
-                now = time.monotonic()
-                print(f"TRACE r{rnd} {label} {now - _last[0]:.2f}s", flush=True)
-                _last[0] = now
-        else:
-            def _tr(label: str) -> None:
-                pass
         frontier = frontier.select(*[f for f, _ in FRONTIER_FIELDS])
         # Parallelism floor for the Python-heavy fetch+extract chain.
         # Spark sizes scan partitions by BYTES, but a frontier row costs
@@ -712,9 +702,7 @@ class CrawlEngine:
             F.sum(F.when(F.col("status_code").isin(*RATE_LIMIT_CODES), 1)
                   .otherwise(0)).alias("n_limited"),
         )
-        _tr("plan_job1")
         self.t_pages.append(round_pages)
-        _tr("job1_pages_write")
         pm = obs_pages.get
         n_total = int(pm["n"] or 0)
         n_failed = int(pm["n_failed"] or 0)
@@ -780,9 +768,7 @@ class CrawlEngine:
             F.min(F.when(F.col("tag") == "h", F.col("budget"))).alias("min_budget"),
         )
         state_dir = self.wh.state_dir(rnd)
-        _tr("plan_job2")
         state.write.partitionBy("tag").mode("overwrite").parquet(state_dir)
-        _tr("job2_state_write")
         sm = obs_state.get
         n_new = int(sm["n_new"] or 0)
         self._frontier_count = int(sm["n_frontier"] or 0)
@@ -808,7 +794,6 @@ class CrawlEngine:
         for df in self._scratch:
             df.unpersist()
         self._scratch.clear()
-        _tr("adopt_unpersist")
 
         # -- seen TTL expiry (recrawl scheduling; default off) --------------
         # The seen table holds exactly one round-stamped dir per round
@@ -823,7 +808,6 @@ class CrawlEngine:
             if expired_rel:
                 self.t_seen.drop_dirs(expired_rel)
             self.bloom.expire(cutoff)
-        _tr("seen_ttl")
 
         # -- filter maintenance (amortized; exactness never depends on it)
         # A sync appends one segment holding the seen dirs of the rounds
@@ -855,7 +839,6 @@ class CrawlEngine:
                 )
             self._bloom_built = True
             self._bloom_synced_round = rnd
-        _tr("bloom")
 
         # -- metrics (driver-side pyarrow append — no Spark job) ------------
         wall = time.monotonic() - t0
@@ -895,7 +878,6 @@ class CrawlEngine:
                 },
             }
         )
-        _tr("metrics_commit")
         return crawled
 
     # ------------------------------------------------------------------

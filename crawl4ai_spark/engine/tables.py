@@ -109,8 +109,9 @@ class SnapshotTable:
         """Replace table contents (new snapshot). Returns new version.
 
         Old data dirs are NOT deleted here — the round checkpoint needs
-        them for exact rollback on resume; the engine vacuums dirs no
-        committed round references (Iceberg expire_snapshots analogue).
+        them for exact rollback on resume. `vacuum` can reclaim dirs no
+        committed round references (Iceberg expire_snapshots analogue),
+        but the engine does not call it yet, so they stay on disk.
         """
         m = self._read_manifest()
         rel = self._write_datadir(df)
@@ -203,8 +204,8 @@ class SnapshotTable:
         """Remove data dirs from the manifest — the Iceberg DeleteFiles /
         drop-partition analogue: a constant-time metadata commit, no
         data rewrite, no Spark job. Files stay on disk so committed
-        round checkpoints can still roll back; vacuum reclaims them
-        once no checkpoint references them."""
+        round checkpoints can still roll back; nothing reclaims them
+        yet (the engine does not call `vacuum`)."""
         gone = set(rel_dirs)
         m = self._read_manifest()
         m = {"version": m["version"] + 1,

@@ -25,7 +25,7 @@ def build_session(
     extra_conf: dict | None = None,
 ) -> SparkSession:
     master = master or os.environ.get("SPARK_GRAFT_MASTER") or "local[{}]".format(
-        os.environ.get("SPARK_GRAFT_CPUS", "32")
+        os.environ.get("SPARK_GRAFT_CPUS") or host_cpus()
     )
     if shuffle_partitions is None:
         # local[N] -> N shuffle partitions; clusters pass an explicit value
@@ -48,7 +48,8 @@ def build_session(
         # a full row group, so cap it at 16 MB (a real cluster spreads
         # writers across executors and would keep the 128 MB default)
         .config("spark.hadoop.parquet.block.size", str(16 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
@@ -59,16 +60,29 @@ def build_session(
     return spark
 
 
+def host_cpus() -> int:
+    """CPUs this process may run on: its affinity set, which a container
+    or taskset narrows below the machine's count."""
+    return len(os.sched_getaffinity(0))
+
+
+def default_driver_memory() -> str:
+    """Half the physical RAM in whole GiB (at least 1g). In local mode
+    the driver JVM also runs every task; the other half stays for the
+    Python workers and the page cache."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, ram // 2**31)}g"
+
+
 def prewarm(spark: SparkSession) -> None:
     """Pay the one-time JVM/Python cold costs on a micro-job, not on
     the first real round.
 
-    The cold-round decomposition (tools/cold_round_profile.py,
-    BENCH.md round 5) shows a fresh JVM's first engine rounds run
-    ~2.5x slower in EVERY phase — driver-side analysis/codegen JIT,
-    whole-stage-codegen class compilation, Python worker pool spinup,
-    shuffle machinery, parquet committer class loading — rather than
-    one slow stage. This exercises each of those paths once at
+    The cold-round decomposition (BENCH.md round 5) shows a fresh
+    JVM's first engine rounds run ~2.5x slower in EVERY phase —
+    driver-side analysis/codegen JIT, whole-stage-codegen class
+    compilation, Python worker pool spinup, shuffle machinery, parquet
+    committer class loading — rather than one slow stage. This exercises each of those paths once at
     trivial data volume (~2-4 s): a codegen aggregation over a
     shuffle, an Arrow-batched pandas-UDF stage, and a parquet
     round-trip. Idempotent; call it right after build_session on a

@@ -239,3 +239,39 @@ def test_resume_carries_plan_facts(spark, tmp_path, plan_log):
     assert plan_log["budget"] == [8]
     assert plan_log["no_discovery"] == [False]
     assert _state(bare, spark) == want
+
+
+# -- a crash before the first commit ------------------------------------------
+
+def test_resume_after_crash_before_round0_commit(spark, tmp_path, monkeypatch):
+    """A crash after round 0's writes but before its commit leaves
+    pages, host_state and metrics ahead of a manifest with no committed
+    round, and host_state pointing into the state dir round 0 rewrites.
+    A fresh engine must reseed from empty tables and end in the
+    uninterrupted crawl's tables, with no page or metrics row twice."""
+    cfg = CrawlConfig(max_depth=3, base_host_budget=8)
+    metric_cols = ["round", "partition_id", "urls_processed", "urls_failed",
+                   "fetch_ms_p50"]
+    full = _crawl(spark, str(tmp_path / "full"), cfg)
+    want = _state(full, spark)
+    want_metrics = _rows(full.t_metrics.read(spark), metric_cols)
+
+    commit = Warehouse.commit_round
+
+    def crash_in_round0(self, entry):
+        if entry["round"] == 0:
+            raise RuntimeError("killed before the round-0 commit")
+        commit(self, entry)
+
+    wh_dir = str(tmp_path / "crashed")
+    monkeypatch.setattr(Warehouse, "commit_round", crash_in_round0)
+    with pytest.raises(RuntimeError, match="round-0 commit"):
+        _crawl(spark, wh_dir, cfg)
+    monkeypatch.undo()
+    assert Warehouse(wh_dir).read_rounds() == []
+
+    resumed = _crawl(spark, wh_dir, cfg)
+    got = _state(resumed, spark)
+    assert got == want
+    assert len(set(got["pages"])) == len(got["pages"])
+    assert _rows(resumed.t_metrics.read(spark), metric_cols) == want_metrics

@@ -27,10 +27,10 @@ def main():
     from pyspark.sql import functions as F
 
     from crawl4ai_spark.ops import similarity as S
-    from crawl4ai_spark.session import build_session
+    from crawl4ai_spark.session import build_session, host_cpus
 
-    spark = build_session(master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
-                          shuffle_partitions=32)
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or host_cpus()
+    spark = build_session(master=f"local[{cpus}]", shuffle_partitions=32)
     spark.sparkContext.setLogLevel("ERROR")
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")

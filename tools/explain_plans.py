@@ -510,9 +510,9 @@ def main():
         "FlatMapCoGroupsInPandas: tasks and monitor states each "
         "exchange once on job_id and meet in one Arrow stage; there "
         "is no cross-job state, so the fold's parallelism is the "
-        "number of dispatcher jobs (tools/dispatcher_stress.py "
-        "measures that axis) and a hot job bounds a PARTITION at "
-        "its own task count, never the cluster.",
+        "number of dispatcher jobs (BENCH.md round 5 measured that "
+        "axis) and a hot job bounds a PARTITION at its own task "
+        "count, never the cluster.",
         fmt(QUERIES["dispatch_memory_adaptive"](spark, SF)),
     ))
 

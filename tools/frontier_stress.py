@@ -23,7 +23,7 @@ select_fetch_batch) survives it:
 
 Usage:
   python tools/frontier_stress.py [N] [hub_pct] [budget] [n_salts] [cpus]
-Defaults: 10_000_000 12 2000 8 $SPARK_GRAFT_CPUS|32
+Defaults: 10_000_000 12 2000 8 $SPARK_GRAFT_CPUS|host CPUs
 
 Prints one JSON line (machine-readable; BENCH.md quotes it).
 """
@@ -73,13 +73,14 @@ def main() -> None:
     hub_pct = int(sys.argv[2]) if len(sys.argv) > 2 else 12
     budget = int(sys.argv[3]) if len(sys.argv) > 3 else 2000
     n_salts = int(sys.argv[4]) if len(sys.argv) > 4 else 8
-    cpus = sys.argv[5] if len(sys.argv) > 5 else os.environ.get(
-        "SPARK_GRAFT_CPUS", "32")
 
     from crawl4ai_spark.engine.cuckoo import CuckooSeenSet
     from crawl4ai_spark.engine.politeness import select_fetch_batch
     from crawl4ai_spark.engine.tables import Warehouse
-    from crawl4ai_spark.session import build_session
+    from crawl4ai_spark.session import build_session, host_cpus
+
+    cpus = sys.argv[5] if len(sys.argv) > 5 else (
+        os.environ.get("SPARK_GRAFT_CPUS") or str(host_cpus()))
 
     spark = build_session(app_name="frontier-stress",
                           master=f"local[{cpus}]",

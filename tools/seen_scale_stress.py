@@ -25,7 +25,7 @@ sees per-shard byte counts and scalar aggregates.
 
 Usage:
   python tools/seen_scale_stress.py [N] [n_shards] [cpus]
-Defaults: 1_000_000_000 256 $SPARK_GRAFT_CPUS|32
+Defaults: 1_000_000_000 256 $SPARK_GRAFT_CPUS|host CPUs
 
 Prints one JSON line (BENCH.md quotes it).
 """
@@ -141,12 +141,13 @@ def run(spark, filt, n: int, width: int) -> dict:
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000_000
     n_shards = int(sys.argv[2]) if len(sys.argv) > 2 else 256
-    cpus = sys.argv[3] if len(sys.argv) > 3 else os.environ.get(
-        "SPARK_GRAFT_CPUS", "32")
 
     from crawl4ai_spark.engine.cuckoo import CuckooSeenSet
     from crawl4ai_spark.engine.tables import Warehouse
-    from crawl4ai_spark.session import build_session
+    from crawl4ai_spark.session import build_session, host_cpus
+
+    cpus = sys.argv[3] if len(sys.argv) > 3 else (
+        os.environ.get("SPARK_GRAFT_CPUS") or str(host_cpus()))
 
     spark = build_session(app_name="seen-scale-stress",
                           master=f"local[{cpus}]",
