@@ -277,14 +277,14 @@ class CuckooSeenSet:
     # -- build: one segment replacing all others (first engage, merge) -------
     def build(self, spark: SparkSession, hashes_df: DataFrame,
               newest_round: int) -> None:
-        self.table.overwrite(self._shards(hashes_df))
-        self.segments = [[self.table.snapshot_data()[-1], newest_round]]
+        self.segments = [[self.table.overwrite(self._shards(hashes_df)),
+                          newest_round]]
 
     # -- sync: append one segment holding only the delta's keys --------------
     def add_hashes(self, spark: SparkSession, hashes_df: DataFrame,
                    newest_round: int) -> None:
-        self.table.append(self._shards(hashes_df))
-        self.segments.append([self.table.snapshot_data()[-1], newest_round])
+        self.segments.append([self.table.append(self._shards(hashes_df)),
+                              newest_round])
 
     # -- TTL: drop whole segments (metadata commit, no job) ------------------
     def expire(self, cutoff_round: int) -> None:

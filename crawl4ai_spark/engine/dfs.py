@@ -28,7 +28,7 @@ parity, not throughput (BFS / best-first are the cluster-shaped
 strategies). Consequently the stack lives driver-side, exactly like the
 reference's in-memory stack, bounded by the discovery frontier of a
 sequential walk; unlike the reference it is checkpointed atomically
-(JSON tmp+rename, the same commit discipline as engine.tables) after
+(the same atomic JSON replace as engine.tables) after
 every step, so a killed DFS crawl resumes mid-traversal. The per-page
 fetch+extract still runs through the same distributed fetcher +
 ``extract_pages`` pass as the BFS engine and appends to the same
@@ -37,14 +37,12 @@ fetch+extract still runs through the same distributed fetcher +
 
 from __future__ import annotations
 
-import json
 import os
-import uuid
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from crawl4ai_spark.engine.tables import Warehouse
+from crawl4ai_spark.engine.tables import Warehouse, _load_json, _replace_json
 from crawl4ai_spark.extraction.extract import extract_pages
 from crawl4ai_spark.functions.urlnorm import (
     can_process_url,
@@ -76,28 +74,15 @@ class DFSEngine:
         self.max_steps = max_steps
         self.t_pages = warehouse.table("pages")
 
-    # -- driver-side checkpoint (tmp+rename, atomic like tables.py) --------
+    # -- driver-side checkpoint ---------------------------------------------
     @property
     def _state_path(self) -> str:
         return os.path.join(self.wh.root, "dfs_state.json")
 
-    def _checkpoint(self, state: dict) -> None:
-        tmp = self._state_path + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(state, f)
-        os.replace(tmp, self._state_path)
-
-    def _load_state(self) -> dict | None:
-        try:
-            with open(self._state_path) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return None
-
     # ----------------------------------------------------------------------
     def run(self, seed: str) -> dict:
         spark = self.spark
-        st = self._load_state()
+        st = _load_json(self._state_path, None)
         if st is None:
             seed_norm = normalize_url_for_deep_crawl(seed, seed)
             st = {
@@ -113,7 +98,7 @@ class DFSEngine:
                 "step": 0,
                 "pages": self.t_pages.snapshot_data(),
             }
-            self._checkpoint(st)
+            _replace_json(self._state_path, st)
         elif self.t_pages.snapshot_data() != st["pages"]:
             # a kill between the pages append and the checkpoint leaves
             # the table one step ahead — roll it back to the committed
@@ -187,7 +172,7 @@ class DFSEngine:
                 st["visited"] = sorted(visited)
                 st["crawled"], st["step"] = crawled, step
                 st["pages"] = self.t_pages.snapshot_data()
-                self._checkpoint(st)
+                _replace_json(self._state_path, st)
         finally:
             spark.conf.set(aqe_key, orig_aqe)
         return {"pages_crawled": crawled, "steps": step}

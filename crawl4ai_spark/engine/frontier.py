@@ -9,8 +9,10 @@ bff_strategy.py:129-213):
            set -> robots gate -> fetch -> extract (one Arrow pass) ->
            append to `pages`. An attached Observation yields the
            round's success/failure counts and fetch-latency p50 inside
-           the write; a per-partition accumulator in the extract stage
-           yields the fetch-metric lineage rows. No counting jobs.
+           the write, and every page row carries the spark_partition_id
+           of the write task that committed it — per-partition fetch
+           lineage that is exactly-once because it is committed data
+           (the crawl_metrics query re-aggregates it). No counting jobs.
   write 2  STATE: link discovery (explode -> canonicalize -> filter ->
            score -> seen anti-join -> capacity cap) and the round-close
            state transition written as ONE tagged, partitioned write:
@@ -42,14 +44,15 @@ write's Observation proves yields no rows:
       discovered link is too deep, so write 2 carries only tag d/h;
   (c) the seen anti-join — while nothing was ever added to seen.
 
-An unknown fact (a manifest written before they were recorded) plans
-the branch in full. Within a round, write 2 plans the rate-limit
+Every fact is in the round record, so a resumed round plans exactly
+like an uninterrupted one. Within a round, write 2 plans the rate-limit
 retries only when write 1's Observation counted a 429/503 page, and
 the politeness result is cached for write 2 only when it can hold
 deferred rows.
 
-Everything else is driver-side bookkeeping: metrics rows are written
-with pyarrow (no job), and the round manifest commit is a JSON rename.
+Everything else is driver-side bookkeeping: the round's metrics row is
+written with pyarrow (no job), and the round checkpoint is one JSON
+record replaced by a rename.
 The seen-set pre-filter is maintained on an amortized schedule (see
 below), adding ~1/bloom_sync_rounds of a job per round.
 
@@ -269,9 +272,10 @@ class CrawlEngine:
         self._bloom_built = False
         self._bloom_synced_round = -1
         self._adaptive_last_round = -1
-        # facts from the last state write's Observation (None = unknown):
-        # the frontier's row count and minimum depth, and the smallest
-        # budget in host_state
+        # facts from the last state write's Observation, set by seed
+        # init or restored from the round record: the frontier's row
+        # count and minimum depth, and the smallest budget in host_state
+        # (None while host_state is empty)
         self._frontier_count: int | None = None
         self._min_depth: int | None = None
         self._min_host_budget: int | None = None
@@ -403,9 +407,8 @@ class CrawlEngine:
             ("pages", self.t_pages), ("host_state", self.t_host),
             ("metrics", self.t_metrics), ("seen_bloom", self.t_bloom),
         ] + self.adaptive_state.tables
-        rounds = self.wh.read_rounds()
-        committed = [r for r in rounds if r.get("committed")]
-        if not committed:
+        last = self.wh.last_round()
+        if last is None:
             # a crash before round 0's commit leaves the tables holding
             # that attempt's rows (host_state even points into the state
             # dir round 0 is about to overwrite): empty them with
@@ -419,35 +422,35 @@ class CrawlEngine:
             else:
                 self.init_from_seeds(seeds or [])
             return 0, 0
-        last = max(committed, key=lambda r: r["round"])
-        self._seen_count = last.get("seen_count", 0)
-        self._bloom_built = last.get("bloom_built", False)
-        self._bloom_synced_round = last.get("bloom_synced_round", -1)
-        segments = last.get("bloom_segments")
-        if self._bloom_built and (segments is None or not all(
+        try:
+            nxt, crawled = last["round"] + 1, last["pages_crawled"]
+            self._seen_count = last["seen_count"]
+            self._bloom_built = last["bloom_built"]
+            self._bloom_synced_round = last["bloom_synced_round"]
+            segments = last["bloom_segments"]
+            self._frontier_count = last["frontier_count"]
+            self._min_depth = last["min_depth"]
+            self._min_host_budget = last["min_host_budget"]
+            self._adaptive_last_round = last["adaptive_last_round"]
+            want = {name: last["tables"][name] for name, _ in tables}
+        except KeyError as e:
+            raise ValueError(
+                f"{self.wh.rounds_path}: round record has no {e}") from None
+        if self._bloom_built and not all(
                 os.path.isdir(os.path.join(self.t_bloom.path, d))
-                for d, _ in segments)):
-            # segment data absent or segments unrecorded (a manifest
-            # written before segments): a missing segment would mark its
-            # keys definitely-new and bypass the exact anti-join — a
-            # mass re-crawl — and without the segments' rounds TTL
-            # cannot expire them. Fall back to exact-only dedup and
-            # empty the stale table; the filter rebuilds at its engage
-            # threshold.
+                for d, _ in segments):
+            # segment data lost: a missing segment would mark its keys
+            # definitely-new and bypass the exact anti-join — a mass
+            # re-crawl. Fall back to exact-only dedup and empty the
+            # stale table; the filter rebuilds at its engage threshold.
             self._bloom_built = False
             self._bloom_synced_round = -1
-            last["tables"]["seen_bloom"] = []
-            segments = []
-        self.bloom.segments = segments or []
-        self._frontier_count = last.get("frontier_count")
-        self._min_depth = last.get("min_depth")
-        self._min_host_budget = last.get("min_host_budget")
-        self._adaptive_last_round = last.get("adaptive_last_round", -1)
+            want["seen_bloom"] = segments = []
+        self.bloom.segments = segments
         for name, tbl in tables:
-            want = last["tables"].get(name)
-            if want is not None and tbl.snapshot_data() != want:
-                tbl.rollback_to(want)
-        return last["round"] + 1, last["pages_crawled"]
+            if tbl.snapshot_data() != want[name]:
+                tbl.rollback_to(want[name])
+        return nxt, crawled
 
     # ------------------------------------------------------------------
     def run(self, seeds: list[str] | None = None,
@@ -471,6 +474,9 @@ class CrawlEngine:
         orig_coal = self.spark.conf.get(coal_key, "true")
         try:
             self.spark.conf.set(coal_key, "false")
+            # seed init has no join for AQE to re-plan, and with AQE on
+            # each of its shuffles is a job of its own
+            self.spark.conf.set(aqe_key, "false")
             start_round, crawled = self.resume_or_init(seeds, seed_df)
             stats = {"rounds": 0, "pages_crawled": crawled}
             for rnd in range(start_round, cfg.max_rounds):
@@ -478,18 +484,11 @@ class CrawlEngine:
                     break
                 if self._frontier_count == 0:
                     break
-                frontier = self.t_frontier.read(self.spark)
-                if frontier is None:
-                    break
-                if self._frontier_count is None and frontier.isEmpty():
-                    break  # only resumed-from-old-manifest paths pay this job
-                small = (
-                    self._frontier_count is not None
-                    and self._frontier_count < AQE_SMALL_ROUND_ROWS
-                )
+                small = self._frontier_count < AQE_SMALL_ROUND_ROWS
                 want = "false" if small else orig_aqe
                 if self.spark.conf.get(aqe_key) != want:
                     self.spark.conf.set(aqe_key, want)
+                frontier = self.t_frontier.read(self.spark)
                 crawled = self._run_round(rnd, frontier, crawled)
                 stats["rounds"] += 1
                 stats["pages_crawled"] = crawled
@@ -617,7 +616,7 @@ class CrawlEngine:
         budgets = [cfg.base_host_budget]
         if host_state is not None:
             budgets.append(self._min_host_budget)
-        fits = (self._frontier_count is not None and None not in budgets
+        fits = (None not in budgets
                 and self._frontier_count <= min(budgets))
         base_budget = None if fits else cfg.base_host_budget
         marked = select_fetch_batch(
@@ -667,8 +666,7 @@ class CrawlEngine:
             to_fetch.select(*fetch_cols)
         ).withColumn("url", F.col("url_norm"))
 
-        part_acc = self.spark.sparkContext.accumulator({}, _PartMetricsAcc())
-        pages = extract_pages(fetched, keep_cols=carry, metrics_acc=part_acc).drop("url")
+        pages = extract_pages(fetched, keep_cols=carry).drop("url")
 
         round_pages = pages
         if denied is not None:
@@ -689,7 +687,11 @@ class CrawlEngine:
                 for c in pages.columns
             ])
             round_pages = pages.unionByName(denied_pages)
-        round_pages = round_pages.withColumn("round", F.lit(rnd))
+        # partition_id: the write task that commits each row — the
+        # per-partition lineage, exactly-once because it is committed
+        # data (a retried task's rows are discarded with its attempt)
+        round_pages = round_pages.withColumns(
+            {"round": F.lit(rnd), "partition_id": F.spark_partition_id()})
 
         # counts + latency p50 ride the write via Observation — the old
         # separate metrics-aggregation job is gone
@@ -702,15 +704,16 @@ class CrawlEngine:
             F.sum(F.when(F.col("status_code").isin(*RATE_LIMIT_CODES), 1)
                   .otherwise(0)).alias("n_limited"),
         )
-        self.t_pages.append(round_pages)
+        rel = self.t_pages.append(round_pages)
         pm = obs_pages.get
         n_total = int(pm["n"] or 0)
         n_failed = int(pm["n_failed"] or 0)
-        n_success = n_total - n_failed
-        crawled = crawled_before + n_success
+        crawled = crawled_before + n_total - n_failed
 
-        # downstream re-reads the materialized round from parquet
-        round_df = self.t_pages.read(self.spark).where(F.col("round") == rnd)
+        # downstream re-reads the materialized round from parquet: only
+        # the dir this append committed, no listing of earlier rounds
+        round_df = self.spark.read.schema(round_pages.schema).parquet(
+            os.path.join(self.t_pages.path, rel))
 
         # -- WRITE 2: discovery + tagged state write -----------------------
         cands = self._discover(round_df, crawled, rnd)
@@ -841,21 +844,16 @@ class CrawlEngine:
             self._bloom_synced_round = rnd
 
         # -- metrics (driver-side pyarrow append — no Spark job) ------------
-        wall = time.monotonic() - t0
-        rows = [
-            (rnd, int(pid), int(n), int(f), None, wall)
-            for pid, (n, f) in sorted(part_acc.value.items())
-        ]
-        rows.append((rnd, -1, n_total, n_failed,
-                     int(pm["p50"] or 0), wall))  # round summary row
-        self.t_metrics.append_rows(rows, _metrics_arrow_schema())
+        self.t_metrics.append_rows(
+            [(rnd, n_total, n_failed, int(pm["p50"] or 0),
+              time.monotonic() - t0)],
+            _metrics_arrow_schema())
 
         # -- commit ----------------------------------------------------------
         self.wh.commit_round(
             {
                 "round": rnd,
                 "pages_crawled": crawled,
-                "n_success": n_success,
                 "seen_count": self._seen_count,
                 "frontier_count": self._frontier_count,
                 "min_depth": self._min_depth,
@@ -864,7 +862,6 @@ class CrawlEngine:
                 "bloom_synced_round": self._bloom_synced_round,
                 "bloom_segments": self.bloom.segments,
                 "adaptive_last_round": self._adaptive_last_round,
-                "wall_s": time.monotonic() - t0,
                 "tables": {
                     **{
                         "frontier": self.t_frontier.snapshot_data(),
@@ -935,10 +932,10 @@ class CrawlEngine:
         cfg = self.cfg
         if cfg.max_pages is not None and crawled >= cfg.max_pages:
             return None
-        if (self._min_depth or 0) + 1 > cfg.max_depth:
+        if self._min_depth + 1 > cfg.max_depth:
             # rule (b): every page of this round is at least min_depth
-            # deep (an unknown min is 0), so no link can be admitted —
-            # skip the pages re-scan entirely
+            # deep, so no link can be admitted — skip the pages re-scan
+            # entirely
             return None
 
         links = (
@@ -1067,35 +1064,13 @@ class CrawlEngine:
         )
 
 
-# ---------------------------------------------------------------------------
-# per-partition fetch-metric lineage (north rule) without a metrics job
-# ---------------------------------------------------------------------------
-
-from pyspark.accumulators import AccumulatorParam  # noqa: E402
-
-
-class _PartMetricsAcc(AccumulatorParam):
-    """dict accumulator: partition_id -> (processed, failed); merged
-    associatively on the driver as extract tasks complete."""
-
-    def zero(self, value):
-        return {}
-
-    def addInPlace(self, a, b):
-        for pid, (n, f) in b.items():
-            pn, pf = a.get(pid, (0, 0))
-            a[pid] = (pn + n, pf + f)
-        return a
-
-
 def _metrics_arrow_schema():
     import pyarrow as pa
 
     return pa.schema([
         pa.field("round", pa.int32()),
-        pa.field("partition_id", pa.int32()),   # -1 == round summary row
         pa.field("urls_processed", pa.int64()),
         pa.field("urls_failed", pa.int64()),
-        pa.field("fetch_ms_p50", pa.int64()),   # null on per-partition rows
+        pa.field("fetch_ms_p50", pa.int64()),
         pa.field("wall_s", pa.float64()),
     ])

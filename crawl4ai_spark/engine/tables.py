@@ -1,13 +1,13 @@
 """Atomic snapshot tables — the engine's state layer.
 
 Production target is Iceberg (`MERGE INTO pages`, snapshot ids in a
-round manifest, partition pruning on round/host-hash); this module is a
-dependency-free stand-in with the same commit semantics so the engine
+round checkpoint, partition pruning on round/host-hash); this module is
+a dependency-free stand-in with the same commit semantics so the engine
 code is connector-agnostic: a table is a directory of immutable parquet
 data dirs plus a JSON manifest that is swapped atomically
-(``os.replace``). Readers only ever see committed manifests, a killed
+(``_replace_json``). Readers only ever see committed manifests, a killed
 writer leaves at worst orphan data dirs (never a torn table), and
-resume = read the last committed manifest — mirroring the reference's
+resume = read the last round record — mirroring the reference's
 SQLite cache + adaptive-state JSON checkpointing
 (/root/reference/crawl4ai/async_database.py:227-248,
 adaptive_crawler.py:53-110) with Iceberg-style atomicity.
@@ -15,6 +15,9 @@ adaptive_crawler.py:53-110) with Iceberg-style atomicity.
 Layout:
     <warehouse>/<table>/manifest.json      {"version": k, "data": [relpaths]}
     <warehouse>/<table>/d-<uuid>/...       immutable parquet dirs
+    <warehouse>/round_manifest.json        the last committed round's
+                                           record (one JSON object,
+                                           replaced whole each round)
 """
 
 from __future__ import annotations
@@ -25,6 +28,25 @@ import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+
+
+def _replace_json(path: str, obj) -> None:
+    """Atomically replace ``path`` with ``obj`` as JSON: write a temp
+    file beside it, then rename over it (the commit point). A crash
+    leaves the old file or the new one, never a torn one."""
+    tmp = f"{path}.tmp-{uuid.uuid4().hex}"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    os.replace(tmp, path)
+
+
+def _load_json(path: str, default):
+    """The JSON at ``path``, or ``default`` if nothing was committed."""
+    try:
+        with open(path) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return default
 
 
 def _nullable(schema):
@@ -65,17 +87,10 @@ class SnapshotTable:
         return os.path.join(self.path, "manifest.json")
 
     def _read_manifest(self) -> dict:
-        try:
-            with open(self._manifest_path) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {"version": 0, "data": []}
+        return _load_json(self._manifest_path, {"version": 0, "data": []})
 
     def _commit(self, manifest: dict) -> None:
-        tmp = self._manifest_path + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._manifest_path)  # atomic commit point
+        _replace_json(self._manifest_path, manifest)
 
     @property
     def version(self) -> int:
@@ -105,8 +120,9 @@ class SnapshotTable:
         self._schema = _nullable(df.schema)
         return df
 
-    def overwrite(self, df: DataFrame) -> int:
-        """Replace table contents (new snapshot). Returns new version.
+    def overwrite(self, df: DataFrame) -> str:
+        """Replace table contents (new snapshot). Returns the new data
+        dir, relative to the table.
 
         Old data dirs are NOT deleted here — the round checkpoint needs
         them for exact rollback on resume. `vacuum` can reclaim dirs no
@@ -115,10 +131,9 @@ class SnapshotTable:
         """
         m = self._read_manifest()
         rel = self._write_datadir(df)
-        m = {"version": m["version"] + 1, "data": [rel]}
-        self._commit(m)
+        self._commit({"version": m["version"] + 1, "data": [rel]})
         self._schema = _nullable(df.schema)  # table now holds exactly this data
-        return m["version"]
+        return rel
 
     def vacuum(self, keep: set[str]) -> None:
         keep = keep | set(self._read_manifest()["data"])
@@ -126,21 +141,21 @@ class SnapshotTable:
             if d.startswith("d-") and d not in keep:
                 shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
 
-    def append(self, df: DataFrame) -> int:
-        """Append-only fast path (Iceberg AppendFiles): no rewrite."""
+    def append(self, df: DataFrame) -> str:
+        """Append-only fast path (Iceberg AppendFiles): no rewrite.
+        Returns the new data dir, relative to the table."""
         m = self._read_manifest()
         if not m["data"]:
             self._schema = _nullable(df.schema)  # table now holds exactly this data
         elif self._schema is not None and _nullable(df.schema) != self._schema:
             self._schema = None  # mixed-schema dirs: re-infer on next read
         rel = self._write_datadir(df)
-        m = {"version": m["version"] + 1, "data": m["data"] + [rel]}
-        self._commit(m)
-        return m["version"]
+        self._commit({"version": m["version"] + 1, "data": m["data"] + [rel]})
+        return rel
 
     def adopt_dirs(
         self, abs_dirs: list[str], mode: str = "append", schema=None
-    ) -> int:
+    ) -> None:
         """Commit externally-written parquet dirs (e.g. one tag subtree of
         a shared partitioned write) as this table's next snapshot without
         rewriting any data — the Iceberg AppendFiles/ReplaceFiles analogue
@@ -159,11 +174,9 @@ class SnapshotTable:
             self._schema = None
         rels = [os.path.relpath(d, self.path) for d in abs_dirs]
         data = rels if mode == "overwrite" else m["data"] + rels
-        m = {"version": m["version"] + 1, "data": data}
-        self._commit(m)
-        return m["version"]
+        self._commit({"version": m["version"] + 1, "data": data})
 
-    def append_rows(self, rows: list[tuple], schema: "pa.Schema") -> int:
+    def append_rows(self, rows: list[tuple], schema: "pa.Schema") -> None:
         """Driver-side append of a handful of rows (round metrics) via
         pyarrow — no Spark job for dim-sized bookkeeping writes."""
         import pyarrow as pa
@@ -178,13 +191,11 @@ class SnapshotTable:
         )
         pq.write_table(table, os.path.join(d, "part-0.parquet"))
         m = self._read_manifest()
-        m = {"version": m["version"] + 1, "data": m["data"] + [rel]}
-        self._commit(m)
+        self._commit({"version": m["version"] + 1, "data": m["data"] + [rel]})
         self._schema = None  # arrow-written dir: re-infer on next read
-        return m["version"]
 
     def merge_on_key(self, spark: SparkSession, df: DataFrame,
-                     key: str | list[str]) -> int:
+                     key: str | list[str]) -> None:
         """Upsert semantics (Iceberg `MERGE INTO ... ON key`): new rows win.
 
         Test-scale implementation rewrites the table; at 100 TB this is
@@ -193,14 +204,13 @@ class SnapshotTable:
         """
         keys = [key] if isinstance(key, str) else list(key)
         cur = self.read(spark)
-        if cur is None:
-            return self.overwrite(df)
-        merged = cur.join(df.select(*keys), keys, "left_anti").unionByName(df)
+        if cur is not None:
+            df = cur.join(df.select(*keys), keys, "left_anti").unionByName(df)
         # safe ordering: overwrite() writes the new data dir (reading the
         # old dirs, still present) before the commit+cleanup
-        return self.overwrite(merged)
+        self.overwrite(df)
 
-    def drop_dirs(self, rel_dirs: list[str]) -> int:
+    def drop_dirs(self, rel_dirs: list[str]) -> None:
         """Remove data dirs from the manifest — the Iceberg DeleteFiles /
         drop-partition analogue: a constant-time metadata commit, no
         data rewrite, no Spark job. Files stay on disk so committed
@@ -208,10 +218,8 @@ class SnapshotTable:
         yet (the engine does not call `vacuum`)."""
         gone = set(rel_dirs)
         m = self._read_manifest()
-        m = {"version": m["version"] + 1,
-             "data": [d for d in m["data"] if d not in gone]}
-        self._commit(m)
-        return m["version"]
+        self._commit({"version": m["version"] + 1,
+                      "data": [d for d in m["data"] if d not in gone]})
 
     def rollback_to(self, version_data: list[str]) -> None:
         self._commit({"version": self.version + 1, "data": version_data})
@@ -246,28 +254,25 @@ class Warehouse:
                     out[d.split("=", 1)[1]] = os.path.join(state_dir, d)
         return out
 
-    # -- round manifest (checkpoint/resume unit) ---------------------------
+    # -- round checkpoint (checkpoint/resume unit) -------------------------
     @property
-    def _rounds_path(self) -> str:
+    def rounds_path(self) -> str:
         return os.path.join(self.root, "round_manifest.json")
 
-    def read_rounds(self) -> list[dict]:
-        try:
-            with open(self._rounds_path) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return []
-
     def commit_round(self, entry: dict) -> None:
-        rounds = self.read_rounds()
-        rounds = [r for r in rounds if r["round"] != entry["round"]]
-        rounds.append(dict(entry, committed=True))
-        rounds.sort(key=lambda r: r["round"])
-        tmp = self._rounds_path + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(rounds, f)
-        os.replace(tmp, self._rounds_path)
+        """Make ``entry`` the checkpoint: the file holds only the last
+        committed round's record, so a commit costs the same at every
+        round."""
+        _replace_json(self.rounds_path, entry)
 
-    def last_committed_round(self) -> int:
-        rounds = [r["round"] for r in self.read_rounds() if r.get("committed")]
-        return max(rounds) if rounds else -1
+    def last_round(self) -> dict | None:
+        """The last committed round's record; None before round 0
+        commits. A file of another shape (the per-round list older
+        engines wrote) is refused, not guessed at."""
+        rec = _load_json(self.rounds_path, None)
+        if rec is not None and not isinstance(rec, dict):
+            raise ValueError(
+                f"{self.rounds_path}: not a round record (a round list "
+                "from an older engine?); resume needs a warehouse this "
+                "engine wrote")
+        return rec

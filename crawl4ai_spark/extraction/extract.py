@@ -83,11 +83,9 @@ PAGE_SCHEMA = T.StructType(
 )
 
 
-def _make_extractor(carry: tuple[str, ...], metrics_acc=None):
+def _make_extractor(carry: tuple[str, ...]):
     def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # import inside the worker so the shipped zip resolves it
-        from pyspark import TaskContext
-
         from crawl4ai_spark.extraction.citations import (
             convert_links_to_citations,
         )
@@ -95,19 +93,6 @@ def _make_extractor(carry: tuple[str, ...], metrics_acc=None):
         from crawl4ai_spark.functions.sanitize import sanitize_input_encode
 
         for pdf in batches:
-            if metrics_acc is not None:
-                # per-partition fetch lineage rides the task-completion
-                # channel — no separate metrics aggregation job.
-                # At-least-once by design: accumulator updates inside a
-                # transformation are re-applied on task retry /
-                # speculative attempts, so lineage counts can only ever
-                # OVER-count on failure-recovery paths. The round
-                # summary (pages/failures/p50) does NOT come from here —
-                # it rides an Observation on the write action, which is
-                # exactly-once — so retries skew diagnostics only.
-                pid = TaskContext.get().partitionId()
-                failed = int((~pdf["success"]).sum()) if "success" in pdf else 0
-                metrics_acc.add({pid: (len(pdf), failed)})
             out = {k: [] for k in
                    ("url", "spans", "markdown", "markdown_citations",
                     "references_md", "links", "media", "tables", "metadata")}
@@ -146,14 +131,19 @@ def _make_extractor(carry: tuple[str, ...], metrics_acc=None):
     return _extract_batches
 
 
-def extract_pages(fetched: DataFrame, keep_cols: list[str] | None = None,
-                  metrics_acc=None) -> DataFrame:
+def extract_pages(fetched: DataFrame,
+                  keep_cols: list[str] | None = None) -> DataFrame:
     """(url, html, *keep_cols) -> extracted page rows.
 
     ``keep_cols`` (small lineage columns: depth, parent_url, round, ...)
     are passed through the Arrow batch and echoed back — they are tiny
     next to the html payload and avoiding them would cost a re-join
     shuffle on url.
+
+    A pure transformation with no side channel: a retried or speculative
+    task re-runs it harmlessly. Per-partition fetch lineage is a column
+    of the committed pages write (engine/frontier.py), not a count taken
+    here.
     """
     carry = tuple(keep_cols or ())
     schema = T.StructType(
@@ -161,5 +151,5 @@ def extract_pages(fetched: DataFrame, keep_cols: list[str] | None = None,
         + [f for f in fetched.schema.fields if f.name in carry]
     )
     return fetched.select("url", "html", *carry).mapInPandas(
-        _make_extractor(carry, metrics_acc), schema
+        _make_extractor(carry), schema
     )

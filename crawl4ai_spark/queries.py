@@ -23,8 +23,6 @@ registered with oracle=None -> the driver records a rows-only check.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -38,6 +36,7 @@ from crawl4ai_spark.corpus.webgen import (
 )
 from crawl4ai_spark.ops import adaptive, dedup, similarity, text as text_ops
 from crawl4ai_spark.ops.text import hash64
+from crawl4ai_spark.session import temp_dir
 
 # ---------------------------------------------------------------------------
 # shared SQL fragments (DuckDB side)
@@ -130,7 +129,7 @@ def crawl_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     corpus = build_corpus(docs).cache()  # rounds re-scan it; build once
-    wh = Warehouse(tempfile.mkdtemp(prefix="c4as_bfs_"))
+    wh = Warehouse(temp_dir("c4as_bfs_"))
     eng = CrawlEngine(
         spark, wh, CorpusFetcher(corpus),
         CrawlConfig(max_depth=_CRAWL_BFS_DEPTH, mode="bfs"),
@@ -171,14 +170,14 @@ FROM fm GROUP BY depth
 
 @register("crawl_metrics", _CRAWL_METRICS_ORACLE)
 def crawl_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The engine's per-round metrics/lineage table (frontier.py
-    round-summary rows + per-partition accumulator rows), closed-form:
-    round r of an unbudgeted BFS fetches exactly the min-depth-r URL
-    set, its p50 fetch latency is the discrete median of the corpus's
-    deterministic fetch_ms = (i % 20) + 1, nothing fails, and the
-    per-partition lineage rows must re-aggregate to the same totals
-    (partition layout itself is config-dependent, so only the sums are
-    pinned). Mirrors the reference's CrawlerMonitor per-task stats
+    """The engine's per-round metrics table (frontier.py round-summary
+    rows) and its per-partition lineage (the pages write's partition_id
+    column), closed-form: round r of an unbudgeted BFS fetches exactly
+    the min-depth-r URL set, its p50 fetch latency is the discrete
+    median of the corpus's deterministic fetch_ms = (i % 20) + 1,
+    nothing fails, and the committed pages grouped by (round,
+    partition_id) must re-aggregate to the same totals (partition
+    layout itself is config-dependent, so only the sums are pinned). Mirrors the reference's CrawlerMonitor per-task stats
     (components/crawler_monitor.py) as a queryable table."""
     from crawl4ai_spark.engine.fetch import CorpusFetcher
     from crawl4ai_spark.engine.frontier import CrawlConfig, CrawlEngine
@@ -186,22 +185,24 @@ def crawl_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     corpus = build_corpus(docs).cache()
-    wh = Warehouse(tempfile.mkdtemp(prefix="c4as_met_"))
+    wh = Warehouse(temp_dir("c4as_met_"))
     eng = CrawlEngine(
         spark, wh, CorpusFetcher(corpus),
         CrawlConfig(max_depth=_CRAWL_BFS_DEPTH, mode="bfs"),
     )
     eng.run([seed_url()])
-    m = eng.t_metrics.read(spark)
-    summary = m.where("partition_id = -1").select(
+    summary = eng.t_metrics.read(spark).select(
         F.col("round").cast("int").alias("round"),
         "urls_processed", "urls_failed", "fetch_ms_p50",
     )
     parts = (
-        m.where("partition_id >= 0")
+        eng.t_pages.read(spark)
+        .groupBy("round", "partition_id")
+        .agg(F.count(F.lit(1)).alias("n"),
+             F.count_if(~F.col("success")).alias("f"))
         .groupBy(F.col("round").cast("int").alias("round"))
-        .agg(F.sum("urls_processed").alias("part_processed"),
-             F.sum("urls_failed").alias("part_failed"))
+        .agg(F.sum("n").alias("part_processed"),
+             F.sum("f").alias("part_failed"))
     )
     return summary.join(parts, "round").select(
         "round", "urls_processed", "urls_failed", "fetch_ms_p50",
@@ -474,7 +475,7 @@ def crawl_bestfirst(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     corpus = build_corpus(docs).cache()  # rounds re-scan it; build once
-    wh = Warehouse(tempfile.mkdtemp(prefix="c4as_bff_"))
+    wh = Warehouse(temp_dir("c4as_bff_"))
     eng = CrawlEngine(
         spark, wh, CorpusFetcher(corpus),
         CrawlConfig(
@@ -2888,7 +2889,7 @@ def crawl_contextual(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     corpus = build_corpus(docs).cache()
-    wh = Warehouse(tempfile.mkdtemp(prefix="c4as_ctx_"))
+    wh = Warehouse(temp_dir("c4as_ctx_"))
     eng = CrawlEngine(
         spark, wh, CorpusFetcher(corpus),
         CrawlConfig(max_depth=_CTX_DEPTH, mode="bfs",
@@ -2972,7 +2973,7 @@ def crawl_dfs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     corpus = build_corpus(docs).cache()
-    wh = Warehouse(tempfile.mkdtemp(prefix="c4as_dfs_"))
+    wh = Warehouse(temp_dir("c4as_dfs_"))
     eng = DFSEngine(
         spark, wh, CorpusFetcher(corpus),
         max_depth=_DFS_DEPTH, max_pages=_DFS_PAGES,
@@ -5295,13 +5296,11 @@ def cache_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     SnapshotTable.merge_on_key: seed a table with every key, merge a
     batch of updated evens + brand-new keys, read the committed state
     back."""
-    import tempfile
-
     from crawl4ai_spark.engine.tables import Warehouse
 
     docs = _t(spark, sf_dir, "documents")
     i = F.col("doc_id").cast("long")
-    wh = Warehouse(tempfile.mkdtemp(prefix="c4as_upsert_"))
+    wh = Warehouse(temp_dir("c4as_upsert_"))
     t = wh.table("cache_demo")
     base = docs.select(
         i.alias("k"), F.format_string("old %d", i).alias("v")

@@ -11,6 +11,7 @@ submitted via `spark-submit --py-files crawl4ai_spark.zip job.py`.
 
 from __future__ import annotations
 
+import atexit
 import os
 import shutil
 import tempfile
@@ -74,6 +75,16 @@ def default_driver_memory() -> str:
     return f"{max(1, ram // 2**31)}g"
 
 
+def temp_dir(prefix: str) -> str:
+    """A new temp dir that is removed when the interpreter exits — for
+    dirs that must outlive the call creating them: the package zip the
+    executors import, a query's warehouse under the lazy DataFrame it
+    returns."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    return d
+
+
 def prewarm(spark: SparkSession) -> None:
     """Pay the one-time JVM/Python cold costs on a micro-job, not on
     the first real round.
@@ -126,7 +137,7 @@ def _ship_package(spark: SparkSession) -> None:
         return
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     parent = os.path.dirname(pkg_dir)
-    zip_base = os.path.join(tempfile.mkdtemp(prefix="c4as_pyfiles_"), "crawl4ai_spark")
+    zip_base = os.path.join(temp_dir("c4as_pyfiles_"), "crawl4ai_spark")
     zip_path = shutil.make_archive(zip_base, "zip", root_dir=parent, base_dir="crawl4ai_spark")
     spark.sparkContext.addPyFile(zip_path)
     spark.conf.set("crawl4ai_spark.shipped", "yes")

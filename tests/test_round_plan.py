@@ -5,17 +5,14 @@ Observation proves yields no rows: the politeness windows when no host
 can exceed its budget (a), link discovery when every page is at
 max_depth (b), and the seen anti-join while seen is empty (c). These
 tests pin that the pruned crawl is the same crawl: a rate-limited host
-through the whole engine, and a resume that must carry the facts (or
-plan in full without them). Also here: seed init runs the URL
-normalizer in one Python stage, and the first append into an empty
-snapshot table pins its read schema.
+through the whole engine, and a resume that must carry the facts.
+Also here: seed init runs the URL normalizer in one Python stage, and
+the first append into an empty snapshot table pins its read schema.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -200,7 +197,6 @@ def test_resume_carries_plan_facts(spark, tmp_path, plan_log):
     budget 8: rounds 0-2 fit the budget (a), round 3 defers 4 of the
     12 depth-3 pages and round 4 fetches them; neither discovers (b).
     A resume between rounds 3 and 4 must plan round 4 the same way,
-    and a manifest without the facts must plan it in full — both
     ending in the uninterrupted crawl's tables."""
     cfg = dict(max_depth=3, base_host_budget=8)
     full = _crawl(spark, str(tmp_path / "full"), CrawlConfig(**cfg))
@@ -215,8 +211,6 @@ def test_resume_carries_plan_facts(spark, tmp_path, plan_log):
     _crawl(spark, part_dir, CrawlConfig(max_rounds=4, **cfg))
     assert plan_log["budget"] == [None, None, None, 8]
     assert plan_log["no_discovery"] == [False, False, False, True]
-    bare_dir = str(tmp_path / "bare")
-    shutil.copytree(part_dir, bare_dir)
 
     plan_log["budget"].clear()
     plan_log["no_discovery"].clear()
@@ -224,21 +218,6 @@ def test_resume_carries_plan_facts(spark, tmp_path, plan_log):
     assert plan_log["budget"] == [None]
     assert plan_log["no_discovery"] == [True]
     assert _state(resumed, spark) == want
-
-    # a manifest written before the facts were recorded plans in full
-    path = os.path.join(bare_dir, "round_manifest.json")
-    with open(path) as f:
-        rounds = json.load(f)
-    for r in rounds:
-        del r["min_depth"], r["min_host_budget"]
-    with open(path, "w") as f:
-        json.dump(rounds, f)
-    plan_log["budget"].clear()
-    plan_log["no_discovery"].clear()
-    bare = _crawl(spark, bare_dir, CrawlConfig(**cfg))
-    assert plan_log["budget"] == [8]
-    assert plan_log["no_discovery"] == [False]
-    assert _state(bare, spark) == want
 
 
 # -- a crash before the first commit ------------------------------------------
@@ -250,8 +229,7 @@ def test_resume_after_crash_before_round0_commit(spark, tmp_path, monkeypatch):
     A fresh engine must reseed from empty tables and end in the
     uninterrupted crawl's tables, with no page or metrics row twice."""
     cfg = CrawlConfig(max_depth=3, base_host_budget=8)
-    metric_cols = ["round", "partition_id", "urls_processed", "urls_failed",
-                   "fetch_ms_p50"]
+    metric_cols = ["round", "urls_processed", "urls_failed", "fetch_ms_p50"]
     full = _crawl(spark, str(tmp_path / "full"), cfg)
     want = _state(full, spark)
     want_metrics = _rows(full.t_metrics.read(spark), metric_cols)
@@ -268,7 +246,7 @@ def test_resume_after_crash_before_round0_commit(spark, tmp_path, monkeypatch):
     with pytest.raises(RuntimeError, match="round-0 commit"):
         _crawl(spark, wh_dir, cfg)
     monkeypatch.undo()
-    assert Warehouse(wh_dir).read_rounds() == []
+    assert Warehouse(wh_dir).last_round() is None
 
     resumed = _crawl(spark, wh_dir, cfg)
     got = _state(resumed, spark)

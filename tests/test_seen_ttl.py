@@ -61,7 +61,7 @@ def test_ttl_recrawls_expired_urls(spark, tmp_path):
     # expiry actually dropped round dirs from the seen manifest
     live_rounds = {_round_of_dir(d) for d in eng.t_seen.snapshot_data()}
     assert None not in live_rounds or len(live_rounds) > 0
-    assert all(r is None or r > eng.wh.last_committed_round() - 2 - 1
+    assert all(r is None or r > eng.wh.last_round()["round"] - 2 - 1
                for r in live_rounds)
 
 
@@ -94,7 +94,7 @@ def test_ttl_with_bloom_backend_same_semantics(spark, tmp_path):
 
     assert crawled("ck") == crawled("off", min_seen=EXACT_ONLY)
     eng = engines[0]
-    cutoff = eng.wh.last_committed_round() - 2
+    cutoff = eng.wh.last_round()["round"] - 2
     assert all(r > cutoff for _, r in eng.bloom.segments), eng.bloom.segments
     assert [d for d, _ in eng.bloom.segments] == eng.t_bloom.snapshot_data()
 
