@@ -81,6 +81,7 @@ import time
 from dataclasses import dataclass
 from typing import Callable, Optional
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -93,7 +94,12 @@ from crawl4ai_spark.engine.politeness import (
 from crawl4ai_spark.engine.robots import apply_robots_gate
 from crawl4ai_spark.engine.tables import Warehouse
 from crawl4ai_spark.extraction.extract import extract_pages
-from crawl4ai_spark.functions.urlnorm import url_host, url_hash
+from crawl4ai_spark.functions.urlnorm import (
+    normalize_url_for_deep_crawl,
+    normalize_urls_udf,
+    url_hash,
+    url_host,
+)
 
 # AQE re-plans every exchange as its own driver-side query stage —
 # valuable on production-size rounds (runtime broadcast, skew-join
@@ -209,8 +215,6 @@ STATE_FIELDS = FRONTIER_FIELDS + [
     ("budget", "int"),       # host_state
     ("fail_count", "int"),   # host_state
 ]
-
-_SEEN_COLS = ["url_hash", "url_norm", "depth", "parent_url", "round"]
 
 _state_struct_cache = None
 
@@ -343,51 +347,70 @@ class CrawlEngine:
         ])
 
     def init_from_seeds(self, seeds: list[str]) -> None:
-        """Small seed lists (the reference's entry shape)."""
-        self.init_from_seed_df(
-            self.spark.createDataFrame([(u,) for u in seeds], "url string")
-        )
+        """Small seed lists (the reference's entry shape), passed as an
+        Arrow table: a local relation, whose rows live on the driver."""
+        self.init_from_seed_df(self.spark.createDataFrame(
+            pa.table({"url": pa.array(seeds, pa.string())})))
 
     def init_from_seed_df(self, seed_df: DataFrame, url_col: str = "url") -> None:
-        """Seed-table path: canonicalization runs distributed via the
-        vectorized UDF — a 10^10-URL seed list never exists driver-side
-        (the reference's seeder feeds arun_many the same way,
-        async_url_seeder.py -> async_webcrawler.py:653)."""
-        from crawl4ai_spark.functions.urlnorm import normalize_urls_udf
+        """Canonicalize, dedupe and write the seeds as the depth-0
+        frontier; seen starts empty.
 
+        The rows of a local relation (a seed list, a pandas or Arrow
+        table) already live on the driver: they are collected without a
+        job, canonicalized by the same function the UDF applies and
+        deduped in a set, so the frontier write is the only job — no
+        Python stage, no shuffle. Any other seed table is canonicalized
+        distributed via the vectorized UDF — a 10^10-URL seed list never
+        exists driver-side (the reference's seeder feeds arun_many the
+        same way, async_url_seeder.py -> async_webcrawler.py:653)."""
         self._seen_count = 0
         self._bloom_built = False
         self._bloom_synced_round = -1
         self._min_depth = 0
         self._min_host_budget = None
-        # spread seeds before the normalize UDF: seed tables often arrive
-        # in few partitions (one sitemap file, one export), which would
-        # serialize canonicalization into one task
-        seed_df = seed_df.repartition(
-            self.spark.sparkContext.defaultParallelism, F.col(url_col)
-        )
-        df = (
-            seed_df.select(
-                normalize_urls_udf(F.col(url_col), F.col(url_col)).alias("url_norm")
+        if seed_df.isLocal():
+            urls = {n for (u,) in seed_df.select(url_col).collect()
+                    if (n := normalize_url_for_deep_crawl(u, u)) is not None}
+            df = self.spark.createDataFrame(
+                pa.table({"url_norm": pa.array(sorted(urls), pa.string())}))
+            n_seeds = len(urls)
+        else:
+            # spread seeds before the normalize UDF: seed tables often
+            # arrive in few partitions (one sitemap file, one export),
+            # which would serialize canonicalization into one task
+            seed_df = seed_df.repartition(
+                self.spark.sparkContext.defaultParallelism, F.col(url_col)
             )
-            .where(F.col("url_norm").isNotNull())
-            # seed tables routinely contain raw-URL duplicates that
-            # canonicalize to one url_norm; without this the duplicate
-            # frontier rows are all selected by the winners join and
-            # per-host budgets overshoot in round 0
-            .dropDuplicates(["url_norm"])
-            .withColumns({
-                "depth": F.lit(0),
-                "parent_url": F.lit(None).cast("string"),
-                "score": F.lit(0.0),
-                "retry_count": F.lit(0),
-                "wait_rounds": F.lit(0),
-            })
-        )
+            df = (
+                seed_df.select(
+                    normalize_urls_udf(F.col(url_col), F.col(url_col))
+                    .alias("url_norm")
+                )
+                .where(F.col("url_norm").isNotNull())
+                # seed tables routinely contain raw-URL duplicates that
+                # canonicalize to one url_norm; without this the
+                # duplicate frontier rows are all selected by the winners
+                # join and per-host budgets overshoot in round 0
+                .dropDuplicates(["url_norm"])
+            )
+            n_seeds = None
+        df = df.withColumns({
+            "depth": F.lit(0),
+            "parent_url": F.lit(None).cast("string"),
+            "score": F.lit(0.0),
+            "retry_count": F.lit(0),
+            "wait_rounds": F.lit(0),
+        })
         frontier = self._to_state(self._frontier_row(df))
-        obs = Observation()
-        self.t_frontier.overwrite(frontier.observe(obs, F.count(F.lit(1)).alias("n")))
-        self._frontier_count = int(obs.get["n"])
+        if n_seeds is None:  # a seed table: count rows as they are written
+            obs = Observation()
+            self.t_frontier.overwrite(
+                frontier.observe(obs, F.count(F.lit(1)).alias("n")))
+            n_seeds = int(obs.get["n"])
+        else:
+            self.t_frontier.overwrite(frontier)
+        self._frontier_count = n_seeds
         # reference quirk kept: `visited` starts EMPTY — seeds enter the
         # seen set only when (re)discovered by link_discovery
         # (bfs_strategy.py:152-156), so a seed linked from a deeper page
@@ -1065,8 +1088,6 @@ class CrawlEngine:
 
 
 def _metrics_arrow_schema():
-    import pyarrow as pa
-
     return pa.schema([
         pa.field("round", pa.int32()),
         pa.field("urls_processed", pa.int64()),

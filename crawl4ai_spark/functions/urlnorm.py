@@ -235,7 +235,8 @@ def normalize_urls_fast_udf(href_col, base_col):
 
 
 def url_host(col):
-    """Native host extraction (no Python): lowercased netloc incl. port."""
+    """Native host extraction (no Python): the lowercased host, without
+    the port (parse_url's HOST part: http://A.b.com:8080/x -> a.b.com)."""
     return F.lower(F.coalesce(F.parse_url(col, F.lit("HOST")), F.lit("")))
 
 

@@ -52,6 +52,10 @@ def build_session(
         .config("spark.driver.memory",
                 os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
+        # PySpark otherwise captures the Python call site on every
+        # Column/DataFrame call (~5 py4j round trips each) for the
+        # origin section of analysis errors; the errors themselves stay
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
     for k, v in (extra_conf or {}).items():

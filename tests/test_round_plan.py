@@ -6,8 +6,10 @@ can exceed its budget (a), link discovery when every page is at
 max_depth (b), and the seen anti-join while seen is empty (c). These
 tests pin that the pruned crawl is the same crawl: a rate-limited host
 through the whole engine, and a resume that must carry the facts.
-Also here: seed init runs the URL normalizer in one Python stage, and
-the first append into an empty snapshot table pins its read schema.
+Also here: seed init canonicalizes a seed list on the driver (no
+Python stage, no shuffle) and a seed table in one Python stage, both to
+the same frontier, and the first append into an empty snapshot table
+pins its read schema.
 """
 
 from __future__ import annotations
@@ -73,13 +75,10 @@ def _state(eng, spark):
     return out
 
 
-# -- seed init: one Python pass -----------------------------------------------
+# -- seed init: local seeds on the driver, seed tables distributed ------------
 
-def test_seed_init_normalizes_once(spark, tmp_path):
-    raw = ["http://a.example.com/x", "http://a.example.com/x#frag",
-           "https://B.example.com/y", "bad", ""]
-    eng = CrawlEngine(spark, Warehouse(str(tmp_path / "wh")), None,
-                      CrawlConfig())
+def _plan_spy(eng):
+    """Executed plans of the frontier overwrites."""
     plans = []
     overwrite = eng.t_frontier.overwrite
 
@@ -88,17 +87,90 @@ def test_seed_init_normalizes_once(spark, tmp_path):
         return overwrite(df)
 
     eng.t_frontier.overwrite = spy
-    eng.init_from_seeds(raw)
-    assert plans[0].count("ArrowEvalPython") == 1, plans[0]
+    return plans
 
+
+def test_seed_init_normalizes_once(spark, tmp_path):
+    raw = ["http://a.example.com/x", "http://a.example.com/x#frag",
+           "https://B.example.com/y", "bad", ""]
     want = sorted({n for u in raw if (n := _norm(u)) is not None})
-    got = _rows(eng.t_frontier.read(spark),
-                ["url_norm", "depth", "parent_url", "retry_count",
-                 "wait_rounds"])
-    assert got == [(u, 0, None, 0, 0) for u in want]
+    cols = ["url_norm", "depth", "parent_url", "retry_count", "wait_rounds"]
+
+    # a seed table: the normalize UDF runs in one Python stage
+    table = spark.createDataFrame([(u,) for u in raw], "url string")
+    assert not table.isLocal()
+    eng = CrawlEngine(spark, Warehouse(str(tmp_path / "wh_t")), None,
+                      CrawlConfig())
+    plans = _plan_spy(eng)
+    eng.init_from_seed_df(table)
+    assert plans[0].count("ArrowEvalPython") == 1, plans[0]
+    assert _rows(eng.t_frontier.read(spark), cols) == [
+        (u, 0, None, 0, 0) for u in want]
     assert eng._frontier_count == len(want)
     # seen starts empty by a metadata commit, not a Spark write
     assert eng.t_seen.snapshot_data() == []
+
+    # a seed list is a local relation: no Python stage, no shuffle
+    eng = CrawlEngine(spark, Warehouse(str(tmp_path / "wh_l")), None,
+                      CrawlConfig())
+    plans = _plan_spy(eng)
+    eng.init_from_seeds(raw)
+    assert plans[0].count("ArrowEvalPython") == 0, plans[0]
+    assert plans[0].count("Exchange") == 0, plans[0]
+    assert _rows(eng.t_frontier.read(spark), cols) == [
+        (u, 0, None, 0, 0) for u in want]
+    assert eng._frontier_count == len(want)
+    assert eng.t_seen.snapshot_data() == []
+
+
+def _seed_jobs(spark, group, init):
+    """Run init() under a new job group; the number of jobs it ran."""
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        init()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_seed_forms_write_the_same_frontier(spark, tmp_path):
+    import pandas as pd
+
+    raw = ["http://Shop.example.com/a", "http://shop.example.com/a#top",
+           "http://shop.example.com/a?utm_source=x&utm_medium=y",
+           "http://SHOP.example.com/a/", "https://shop.example.com/b?id=2",
+           "https://shop.example.com/b?id=2&utm_campaign=z#f",
+           "http://other.example.org:8080/p?q=1", "", None, "bad"]
+    state_cols = [f for f, _ in frontier_mod.STATE_FIELDS]
+    forms = {
+        "list": lambda eng: eng.init_from_seeds(raw),
+        "pandas": lambda eng: eng.init_from_seed_df(
+            spark.createDataFrame(pd.DataFrame({"url": raw}))),
+        "table": lambda eng: eng.init_from_seed_df(
+            spark.createDataFrame([(u,) for u in raw], "url string")),
+    }
+    frontiers, counts, jobs = {}, {}, {}
+    for name, init in forms.items():
+        eng = CrawlEngine(spark, Warehouse(str(tmp_path / name)), None,
+                          CrawlConfig())
+        jobs[name] = _seed_jobs(spark, f"seed-init-{tmp_path.name}-{name}",
+                                lambda: init(eng))
+        frontiers[name] = _rows(eng.t_frontier.read(spark), state_cols)
+        counts[name] = eng._frontier_count
+    assert spark.createDataFrame(pd.DataFrame({"url": raw})).isLocal()
+    want = sorted({n for u in raw if (n := _norm(u)) is not None})
+    assert [r[0] for r in frontiers["list"]] == want
+    assert frontiers["pandas"] == frontiers["list"]
+    assert frontiers["table"] == frontiers["list"]
+    assert counts == {name: len(want) for name in forms}
+    assert jobs["list"] == 1, jobs
+
+    eng = CrawlEngine(spark, Warehouse(str(tmp_path / "empty")), None,
+                      CrawlConfig())
+    eng.init_from_seeds([])
+    assert eng.t_frontier.read(spark).count() == 0
+    assert eng._frontier_count == 0
 
 
 # -- snapshot table: the first append or adopt pins the read schema ----------
