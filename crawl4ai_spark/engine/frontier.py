@@ -149,10 +149,6 @@ class CrawlConfig:
     # shape — no rewrite job), and on the filter it drops every segment
     # whose newest round expired.
     seen_ttl_rounds: Optional[int] = None
-    # capacity cap: below this `remaining`, exact global top-k
-    # (TakeOrdered); above it, an approx-quantile score cut — an exact
-    # remaining-sized heap per task is a scale hazard at 10^7+ remaining
-    cap_exact_limit: int = 1_000_000
     # loop control
     max_rounds: int = 1000
     # scoring/filtering: url Column -> Column
@@ -283,7 +279,6 @@ class CrawlEngine:
         self._frontier_count: int | None = None
         self._min_depth: int | None = None
         self._min_host_budget: int | None = None
-        self._scratch: list[DataFrame] = []      # persisted intermediates
         self.memory_gate = None
         if self.cfg.memory_adaptive is not None:
             from crawl4ai_spark.engine.dispatcher import (
@@ -817,9 +812,6 @@ class CrawlEngine:
                 [tag_dirs["h"]], mode="overwrite", schema=st_schema)
 
         marked.unpersist()
-        for df in self._scratch:
-            df.unpersist()
-        self._scratch.clear()
 
         # -- seen TTL expiry (recrawl scheduling; default off) --------------
         # The seen table holds exactly one round-stamped dir per round
@@ -1036,51 +1028,15 @@ class CrawlEngine:
         elif seen is not None:
             cands = cands.join(seen.select("url_hash"), "url_hash", "left_anti")
 
-        # capacity cap by score desc (bfs_strategy.py:124-131)
+        # capacity cap by score desc (bfs_strategy.py:124-131): an exact
+        # global top-k (TakeOrdered) at every size; url_norm is unique
+        # after the dedup agg, so the order is total
         if cfg.max_pages is not None:
             remaining = max(0, cfg.max_pages - crawled)
-            order = [F.col("score").desc(), F.col("depth").asc(),
-                     F.col("url_norm").asc()]
-            if remaining <= cfg.cap_exact_limit:
-                cands = cands.orderBy(*order).limit(remaining)
-            else:
-                # scale path: a remaining-sized TakeOrdered heap per task
-                # is a non-starter at 10^7+; cut at the approximate score
-                # quantile instead (documented approximation — only
-                # reachable with max_pages > cap_exact_limit).
-                # `score >= thr` alone is NOT a cap: every thr-tied row
-                # survives, and with a constant/default scorer ALL rows
-                # tie — so the cap must also sub-select the tied band.
-                # Strictly-above rows all belong to the exact top-k; the
-                # tied band is trimmed to the residual need either
-                # exactly (small need: same (depth, url_norm) tie-break
-                # as the exact path) or by a deterministic url_hash
-                # quantile cut (huge need: no heap, overshoot bounded by
-                # the sketch's 0.1% relative error instead of unbounded).
-                cands = cands.persist()
-                self._scratch.append(cands)  # unpersisted after the state write
-                n_cand = cands.count()
-                if n_cand > remaining:
-                    q = 1.0 - remaining / n_cand
-                    thr = cands.approxQuantile("score", [q], 0.001)[0]
-                    above = cands.where(F.col("score") > thr)
-                    tied = cands.where(F.col("score") == thr)
-                    needed = remaining - above.count()
-                    if needed <= 0:
-                        cands = above
-                    elif needed <= cfg.cap_exact_limit:
-                        cands = above.unionByName(
-                            tied.orderBy(F.col("depth").asc(),
-                                         F.col("url_norm").asc()).limit(needed)
-                        )
-                    else:
-                        n_tied = tied.count()
-                        if n_tied > needed:
-                            cut = tied.approxQuantile(
-                                "url_hash", [needed / n_tied], 0.001
-                            )[0]
-                            tied = tied.where(F.col("url_hash") <= cut)
-                        cands = above.unionByName(tied)
+            cands = cands.orderBy(
+                F.col("score").desc(), F.col("depth").asc(),
+                F.col("url_norm").asc(),
+            ).limit(remaining)
 
         return cands.withColumns(
             {"retry_count": F.lit(0), "wait_rounds": F.lit(0)}

@@ -24,7 +24,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -125,21 +124,14 @@ class SnapshotTable:
         dir, relative to the table.
 
         Old data dirs are NOT deleted here — the round checkpoint needs
-        them for exact rollback on resume. `vacuum` can reclaim dirs no
-        committed round references (Iceberg expire_snapshots analogue),
-        but the engine does not call it yet, so they stay on disk.
+        them for exact rollback on resume. Nothing reclaims the dirs no
+        committed round references yet, so they stay on disk.
         """
         m = self._read_manifest()
         rel = self._write_datadir(df)
         self._commit({"version": m["version"] + 1, "data": [rel]})
         self._schema = _nullable(df.schema)  # table now holds exactly this data
         return rel
-
-    def vacuum(self, keep: set[str]) -> None:
-        keep = keep | set(self._read_manifest()["data"])
-        for d in os.listdir(self.path):
-            if d.startswith("d-") and d not in keep:
-                shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
 
     def append(self, df: DataFrame) -> str:
         """Append-only fast path (Iceberg AppendFiles): no rewrite.
@@ -215,7 +207,7 @@ class SnapshotTable:
         drop-partition analogue: a constant-time metadata commit, no
         data rewrite, no Spark job. Files stay on disk so committed
         round checkpoints can still roll back; nothing reclaims them
-        yet (the engine does not call `vacuum`)."""
+        yet."""
         gone = set(rel_dirs)
         m = self._read_manifest()
         self._commit({"version": m["version"] + 1,

@@ -174,21 +174,3 @@ def head_relevance_scores(corpus: DataFrame, query_terms: list[str],
     return bm25_scores(ctx, query_terms).select(
         F.col("doc_id").alias("url"), F.col("bm25").alias("relevance")
     )
-
-
-def enrich_seeds_with_heads(seeds: DataFrame, corpus: DataFrame,
-                            url_col: str = "url_norm") -> DataFrame:
-    """Seed enrichment (async_url_seeder extract_head=True): left-join
-    parsed head data onto candidate URL rows; URLs missing from the
-    corpus keep null head columns (the reference records valid=False)."""
-    heads = parse_heads(
-        corpus.select(F.col(url_col).alias("url"), "html")
-    ).withColumn("__head_hit", F.lit(True))
-    return seeds.join(
-        heads.withColumnRenamed("url", url_col), url_col, "left"
-    ).withColumn(
-        # valid == the URL WAS in the corpus (the reference keys valid
-        # on fetch success) — a fetched page whose head simply has no
-        # <title> must not look identical to a never-fetched URL
-        "head_valid", F.coalesce(F.col("__head_hit"), F.lit(False))
-    ).drop("__head_hit")

@@ -20,11 +20,6 @@ def _url(col) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-def filter_chain(*predicates: Column) -> Column:
-    """AND of filters (FilterChain.apply, filters.py:69-116)."""
-    return reduce(lambda a, b: a & b, predicates, F.lit(True))
-
-
 def filter_chain_stats(df, named_predicates: dict[str, Column]):
     """Per-filter decision counters (FilterStats, reference
     deep_crawling/filters.py:25-66: total_urls / passed_urls /
@@ -237,8 +232,3 @@ def seo_quality_score(url, title, description, keywords: list[str] | None = None
         + F.when(u.contains("_"), 0.05).otherwise(0.0)
     )
     return (score + F.lit(0.3) - penalty).cast("double")
-
-
-def seo_filter(url, title, description, threshold: float = 0.65,
-               keywords: list[str] | None = None) -> Column:
-    return seo_quality_score(url, title, description, keywords) >= threshold

@@ -167,11 +167,3 @@ def composite_score(*scores: Column, normalize: bool = True) -> Column:
     if normalize and scores:
         total = total / F.lit(len(scores))
     return total.cast("double")
-
-
-def frontier_priority(depth_col, score_col) -> Column:
-    """North-rule priority = depth + link-score; LOWER sorts first,
-    honoring best-first's convention (bff_strategy.py:138-139)."""
-    return (_url(depth_col).cast("double") + _url(score_col).cast("double")).alias(
-        "priority"
-    )

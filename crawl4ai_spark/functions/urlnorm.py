@@ -32,7 +32,7 @@ from urllib.parse import parse_qs, urlencode, urljoin, urlparse, urlunparse
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import BooleanType, StringType
+from pyspark.sql.types import StringType
 
 TRACKING_PARAMS = ("utm_source", "utm_medium", "utm_campaign", "ref", "fbclid")
 
@@ -197,11 +197,6 @@ def base_domain_udf(url: pd.Series) -> pd.Series:
     return url.map(lambda u: get_base_domain(u) if u else "")
 
 
-@pandas_udf(BooleanType())
-def can_process_url_udf(url: pd.Series) -> pd.Series:
-    return url.map(lambda u: can_process_url(u) if u else False)
-
-
 def normalize_urls_udf(href_col, base_col):
     """Column API: canonicalize (href, base) pairs."""
     return _normalize_pair_udf(href_col, base_col)
@@ -238,15 +233,6 @@ def url_host(col):
     """Native host extraction (no Python): the lowercased host, without
     the port (parse_url's HOST part: http://A.b.com:8080/x -> a.b.com)."""
     return F.lower(F.coalesce(F.parse_url(col, F.lit("HOST")), F.lit("")))
-
-
-def url_path(col):
-    return F.coalesce(F.parse_url(col, F.lit("PATH")), F.lit(""))
-
-
-def url_scheme(col):
-    # parse_url has no SCHEME part; substring before '://'
-    return F.lower(F.substring_index(col, "://", 1))
 
 
 def url_hash(col):

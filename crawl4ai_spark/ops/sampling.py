@@ -12,11 +12,10 @@ set is exactly reproducible cross-engine (the DuckDB oracle replays the
 same arithmetic).
 
 Scale note: the per-stratum cumsum window sorts each source inside one
-task. With few huge strata, pre-cut candidates before the window the
-way the frontier capacity cap does (engine/frontier.py:817-846):
-approx-quantile the hash at the budget's expected row fraction, keep
-rows below the cut plus a margin, and only THAT sliver enters the
-window. The operator here keeps the exact single-window form; the
+task. With few huge strata, candidates can be pre-cut before the
+window: approx-quantile the hash at the budget's expected row fraction,
+keep rows below the cut plus a margin, and only THAT sliver enters the
+window. The operator here keeps the exact single-window form; such a
 pre-cut composes around it without changing selected rows.
 """
 

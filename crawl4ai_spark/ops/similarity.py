@@ -210,29 +210,6 @@ def signlsh_neardup_pairs(
     )
 
 
-def cluster_word_count_filter(
-    clustered: DataFrame, texts: DataFrame,
-    id_col: str = "id", cluster_col: str = "cluster",
-    text_col: str = "text", word_count_threshold: int = 10,
-) -> DataFrame:
-    """filter_clusters_by_word_count (extraction_strategy.py:364-390):
-    keep clusters whose concatenated text reaches the word threshold.
-    Output: (cluster, n_members, word_count) for surviving clusters."""
-    from crawl4ai_spark.ops.text import token_count
-
-    joined = clustered.join(
-        texts.select(F.col(id_col).alias("id"), F.col(text_col).alias("__t")), "id"
-    )
-    return (
-        joined.groupBy(cluster_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_members"),
-            F.sum(token_count(F.col("__t"))).alias("word_count"),
-        )
-        .where(F.col("word_count") >= word_count_threshold)
-    )
-
-
 def _ivf_centroid_comps(cell: int, dim: int):
     """Centroid `cell`'s component array: deterministic pseudo-random
     values in [-1, 1], md5-derived — the same cross-engine formula as

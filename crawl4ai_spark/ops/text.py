@@ -75,10 +75,6 @@ def unique_token_count(col) -> Column:
     return F.size(F.array_distinct(tokens(col)))
 
 
-def stopword_hits(col, stopwords: tuple[str, ...] = STOPWORDS) -> Column:
-    return F.size(F.filter(tokens(col), lambda t: t.isin(*stopwords)))
-
-
 def quality_score(col, stopwords: tuple[str, ...] = STOPWORDS) -> Column:
     """Composite document quality in [0,1]:
        0.4 * min(1, n_tokens/100)            (enough content)

@@ -40,29 +40,6 @@ def windowed_event_counts(
     )
 
 
-def host_rate_monitor(
-    fetch_events: DataFrame,
-    window: str = "1 minute",
-    watermark: str = "2 minutes",
-) -> DataFrame:
-    """Per-host fetch-rate / error-rate stream — the live feed a
-    politeness controller would consume (the streaming analogue of the
-    per-round host_state recurrence). Input: (ts, host, status_code)."""
-    return (
-        fetch_events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window), "host")
-        .agg(
-            F.count(F.lit(1)).alias("fetches"),
-            F.sum(F.when(F.col("status_code").isin(429, 503), 1).otherwise(0))
-            .alias("rate_limited"),
-        )
-        .select(
-            F.col("window.start").alias("window_start"), "host",
-            "fetches", "rate_limited",
-        )
-    )
-
-
 def stream_dedup(
     events: DataFrame,
     key_cols: tuple[str, ...] = ("event_id",),

@@ -7,9 +7,14 @@ the documented min(parent_url) deterministic refinement.
 
 from __future__ import annotations
 
+import re
+import zlib
+
 import pytest
+from pyspark.sql import functions as F
 
 from crawl4ai_spark.corpus.fakeshop import fakeshop_spark_df, generate_fakeshop
+from crawl4ai_spark.engine import frontier
 from crawl4ai_spark.engine.fetch import CorpusFetcher
 from crawl4ai_spark.engine.frontier import CrawlConfig, CrawlEngine
 from crawl4ai_spark.engine.tables import Warehouse
@@ -95,14 +100,77 @@ def test_bfs_exact_seen_no_bloom_matches_bloom(spark, tmp_path, corpus_pages, we
     assert crawl_multiset(eng, spark) == sorted((u, d) for (u, d, _p, _s) in log)
 
 
-def test_max_pages_cap(spark, tmp_path, corpus_pages):
-    cfg = CrawlConfig(max_depth=3, max_pages=8)
-    eng, stats = run_engine(spark, tmp_path, corpus_pages, cfg)
-    # reference semantics: the level that crosses the cap still completes,
-    # discovery stops after
-    assert stats["pages_crawled"] >= 8
+VALID_URL = re.compile(r"^https?://[^/]*\.")  # _discover's validity rule
+
+
+def capped_crawl_model(web, seed, max_depth, max_pages, score):
+    """The engine's capped BFS in pure Python: every round fetches its
+    whole level, then admits the first `max_pages - crawled` new
+    candidates by (score desc, depth, url_norm). The seed stays out of
+    the seen set, as in the reference. Returns the crawled
+    (url_norm, depth) multiset and, per discovery round, the candidate
+    count and the number admitted."""
+    seen, level, crawled = set(), [(seed, 0)], 0
+    log, cuts = [], []
+    while level and crawled < max_pages:
+        log += level
+        ok = [(u, d) for u, d in level
+              if u in web and web[u]["status"] == 200]
+        crawled += len(ok)
+        if crawled >= max_pages:
+            break
+        cands = {}
+        for u, d in ok:
+            if d + 1 > max_depth:
+                continue
+            for link, internal in web[u]["links"]:
+                if (internal and link is not None and link not in seen
+                        and VALID_URL.match(link)):
+                    cands[link] = min(cands.get(link, d + 1), d + 1)
+        ranked = sorted(cands, key=lambda u: (-score(u), cands[u], u))
+        remaining = max_pages - crawled
+        cuts.append((len(ranked), min(len(ranked), remaining)))
+        level = [(u, cands[u]) for u in ranked[:remaining]]
+        seen.update(u for u, _ in level)
+    return sorted(log), cuts
+
+
+CAP_SCORERS = {
+    # every candidate scores 0.0: the cap is decided by (depth, url_norm)
+    "default": (None, lambda u: 0.0),
+    # three score classes, each a band of ties
+    "crc32_mod3": (lambda c: F.crc32(c) % 3,
+                   lambda u: zlib.crc32(u.encode()) % 3),
+}
+
+
+@pytest.mark.parametrize("aqe", ["aqe_off", "aqe_on"])
+@pytest.mark.parametrize("partitions", [1, 7])
+@pytest.mark.parametrize("scorer", sorted(CAP_SCORERS))
+def test_max_pages_cap(spark, tmp_path, corpus_pages, web, monkeypatch,
+                       scorer, partitions, aqe):
+    """The capped crawl equals the pure-Python model under every shuffle
+    width and AQE setting: the cap is an exact top-k, ties included."""
+    col_scorer, py_scorer = CAP_SCORERS[scorer]
+    if aqe == "aqe_on":
+        # rounds run under the session's AQE setting only above the
+        # small-round threshold
+        assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+        monkeypatch.setattr(frontier, "AQE_SMALL_ROUND_ROWS", 0)
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
+    try:
+        cfg = CrawlConfig(max_depth=3, max_pages=8, scorer=col_scorer)
+        eng, stats = run_engine(spark, tmp_path, corpus_pages, cfg)
+        got = crawl_multiset(eng, spark)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", width)
+    want, cuts = capped_crawl_model(web, SEED_NORM, 3, 8, py_scorer)
+    # the cap really cuts a level, so ties decide which candidates stay
+    assert any(n > k > 0 for n, k in cuts)
+    assert got == want
     succ = eng.t_pages.read(spark).where("success").count()
-    assert succ == stats["pages_crawled"]
+    assert succ == stats["pages_crawled"] >= 8
 
 
 def test_politeness_budget_limits_per_round(spark, tmp_path, corpus_pages, web):
@@ -150,25 +218,3 @@ def test_resume_equals_uninterrupted(spark, tmp_path, corpus_pages):
     assert crawl_multiset(eng_r, spark) == full_pages
     seen_r = {r.url_norm for r in eng_r.t_seen.read(spark).select("url_norm").collect()}
     assert seen_r == full_seen
-
-
-def test_capacity_cap_quantile_path(spark, tmp_path, corpus_pages):
-    """The scale-path capacity cap (engaged when remaining >
-    cap_exact_limit; forced here with limit 0) must enforce the cap
-    even when every score ties (the default scorer scores everything
-    0.0): the tied band is sub-selected deterministically, so the crawl
-    admits ~remaining candidates per round — never whole levels — and
-    two runs pick the identical set."""
-    cfg_exact = CrawlConfig(max_depth=3, max_pages=8)
-    eng_a, sa = run_engine(spark, tmp_path / "a", corpus_pages, cfg_exact)
-    cfg_quant = CrawlConfig(max_depth=3, max_pages=8,
-                            cap_exact_limit=0)
-    eng_b, sb = run_engine(spark, tmp_path / "b", corpus_pages, cfg_quant)
-    a, b = crawl_multiset(eng_a, spark), crawl_multiset(eng_b, spark)
-    assert sb["pages_crawled"] >= 8          # still reaches the budget
-    # cap enforced: no whole-level blow-up past the exact path's size
-    # (slack = quantile-sketch error, a handful of rows at test scale)
-    assert len(b) <= len(a) + 4
-    # deterministic: an identical re-run admits the identical set
-    eng_c, _ = run_engine(spark, tmp_path / "c", corpus_pages, cfg_quant)
-    assert crawl_multiset(eng_c, spark) == b
