@@ -1,5 +1,5 @@
-"""Partitioned cuckoo-filter URL-seen shards: the crawl engine's
-pre-filter for the exact seen-set anti-join (north-star rule:
+"""Partitioned cuckoo-filter URL-seen shards: they narrow the seen side
+of the crawl engine's exact seen-set anti-join (north-star rule:
 "bloom/cuckoo URL-seen").
 
 A cuckoo filter (Fan et al. 2014, "Cuckoo Filter: Practically Better
@@ -21,8 +21,11 @@ Scale posture and storage contract:
   - shard_id = pmod(xxhash64(url_norm), n_shards); shards are BINARY
     blobs in a snapshot table, cogrouped executor-side — blobs never
     visit the driver, only 8-byte hashes shuffle.
-  - the filter is a PRE-filter with NO FALSE NEGATIVES: "definitely
-    new" skips the exact anti-join, "maybe seen" falls through to it.
+  - the filter has NO FALSE NEGATIVES: the engine's one exact seen
+    anti-join keeps, on its seen side, only the rows of keys the probe
+    reports "maybe seen" plus the rounds not yet synced, so a
+    "definitely new" key can only match that unsynced delta. The probe
+    ships only 8-byte keys into Python, never the candidate rows.
     Cuckoo insertion can fail at high load (an eviction chain runs out
     of kicks); a failed fingerprint goes to the shard's exact OVERFLOW
     STASH (an int64 hash array probed alongside the table), so a full
@@ -294,22 +297,17 @@ class CuckooSeenSet:
             self.segments = [s for s in self.segments if s[1] > cutoff_round]
 
     # -- probe: definitely-new vs maybe-seen --------------------------------
-    def probe(self, spark: SparkSession, cands: DataFrame,
-              hash_col: str = "url_hash") -> DataFrame:
+    def probe(self, spark: SparkSession, cands: DataFrame) -> DataFrame:
+        """(url_hash, maybe_seen), one row per row of ``cands``. Only the
+        url_hash column enters the cogroup, so the candidates' other
+        columns never cross into Python."""
+        keys = cands.select("url_hash")
         prev = self.table.read(spark)
         if prev is None:
-            return cands.withColumn("maybe_seen", F.lit(False))
-        out_schema = T.StructType(
-            list(cands.schema.fields) + [T.StructField("maybe_seen", T.BooleanType())]
-        )
-        tagged = cands.withColumn("__shard", self.shard_col(F.col(hash_col)))
-        cand_cols = cands.columns
+            return keys.withColumn("maybe_seen", F.lit(False))
 
         def probe_shard(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            if left.empty:
-                return pd.DataFrame(columns=cand_cols + ["maybe_seen"])
-            out = left[cand_cols].copy()
-            h = left[hash_col].to_numpy(dtype=np.int64)
+            h = left["url_hash"].to_numpy(dtype=np.int64)
             hit = np.zeros(len(h), dtype=bool)
             # one row per live segment holding this shard, each probed
             # with its own size
@@ -318,11 +316,10 @@ class CuckooSeenSet:
                 table = np.frombuffer(seg.table, dtype=np.uint16).reshape(m, SLOTS)
                 stash = np.frombuffer(seg.stash, dtype=np.int64)
                 hit |= probe_keys(table, stash, h, m)
-            out["maybe_seen"] = hit
-            return out
+            return pd.DataFrame({"url_hash": h, "maybe_seen": hit})
 
         return (
-            tagged.groupBy("__shard")
+            keys.groupBy(self.shard_col(F.col("url_hash")).alias("__shard"))
             .cogroup(prev.groupBy("shard_id"))
-            .applyInPandas(probe_shard, out_schema)
+            .applyInPandas(probe_shard, "url_hash long, maybe_seen boolean")
         )

@@ -53,7 +53,7 @@ deferred rows.
 Everything else is driver-side bookkeeping: the round's metrics row is
 written with pyarrow (no job), and the round checkpoint is one JSON
 record replaced by a rename.
-The seen-set pre-filter is maintained on an amortized schedule (see
+The seen filter is maintained on an amortized schedule (see
 below), adding ~1/bloom_sync_rounds of a job per round.
 
 Determinism contract (SURVEY §2.2): per-depth crawled sets equal the
@@ -62,14 +62,14 @@ parent refined to min(parent_url) among same-round discoverers.
 
 Scale posture: frontier and seen are hash-distributed on xxhash64(url);
 politeness windows are salted two-stage to survive hub-host skew; the
-seen-set anti-join is pre-filtered by a partitioned cuckoo filter
-(engine/cuckoo.py) so only (dups + FP) rows shuffle; every
-`bloom_sync_rounds` rounds the filter appends one immutable segment
-holding the seen DELTA since the last sync (an exact anti-join against
-that small delta covers the gap, so exact-set semantics hold at every
-round), and once MAX_SEGMENTS are live the next sync merges them into
-one build from the seen table; robots/host budgets broadcast; AQE
-handles residual skew. seen_ttl_rounds recrawl scheduling is
+seen-set dedup is one exact anti-join whose seen side a partitioned
+cuckoo filter (engine/cuckoo.py) narrows to the rows of maybe-seen
+candidate keys plus the rounds it has not synced (only the candidates'
+8-byte keys are probed); every `bloom_sync_rounds` rounds the filter
+appends one immutable segment holding the seen DELTA since the last
+sync, and once MAX_SEGMENTS are live the next sync merges them into one
+build from the seen table; robots/host budgets broadcast; AQE handles
+residual skew. seen_ttl_rounds recrawl scheduling is
 metadata-only: expiry drops round dirs from the round-partitioned seen
 table and whole expired segments from the filter.
 """
@@ -126,14 +126,14 @@ class CrawlConfig:
     max_retries: int = 3                     # async_dispatcher.py:33
     fairness_rounds: int = 5
     n_salts: int = 8
-    # seen set: an exact anti-join, pre-filtered by sharded cuckoo
-    # filters (engine/cuckoo.py). Probe false positives fall through to
-    # the exact anti-join and the filter has no false negatives, so the
-    # crawled set never depends on it.
+    # seen set: an exact anti-join whose seen side sharded cuckoo
+    # filters (engine/cuckoo.py) narrow. A probe false positive only
+    # keeps a seen row in that side and the filter has no false
+    # negatives, so the crawled set never depends on it.
     n_shards: int = 32
     # the filter engages only once the exact seen set crosses this size
-    # (it is a PRE-filter for a big anti-join; below this the anti-join
-    # is already cheap and shard maintenance would be pure overhead).
+    # (it narrows a big anti-join; below this the anti-join is already
+    # cheap and shard maintenance would be pure overhead).
     # On crossing, shards are bulk-built from the seen table once, each
     # sized for its own keys. Tests set 0 to engage it from round 0.
     bloom_min_seen: int = 50_000
@@ -261,7 +261,7 @@ class CrawlEngine:
         self.t_pages = warehouse.table("pages")
         self.t_host = warehouse.table("host_state")
         self.t_metrics = warehouse.table("metrics")
-        # the seen-set pre-filter; its table is named for the blob
+        # the seen filter; its table is named for the blob
         # schema, so a table of another layout is never read as this one
         self.t_bloom = warehouse.table("seen_cuckoo")
         self.bloom = CuckooSeenSet(self.t_bloom, self.cfg.n_shards)
@@ -269,7 +269,6 @@ class CrawlEngine:
 
         self.adaptive_state = AdaptiveState(warehouse)
         self._seen_count = 0
-        self._bloom_built = False
         self._bloom_synced_round = -1
         self._adaptive_last_round = -1
         # facts from the last state write's Observation, set by seed
@@ -360,7 +359,6 @@ class CrawlEngine:
         exists driver-side (the reference's seeder feeds arun_many the
         same way, async_url_seeder.py -> async_webcrawler.py:653)."""
         self._seen_count = 0
-        self._bloom_built = False
         self._bloom_synced_round = -1
         self._min_depth = 0
         self._min_host_budget = None
@@ -443,7 +441,6 @@ class CrawlEngine:
         try:
             nxt, crawled = last["round"] + 1, last["pages_crawled"]
             self._seen_count = last["seen_count"]
-            self._bloom_built = last["bloom_built"]
             self._bloom_synced_round = last["bloom_synced_round"]
             segments = last["bloom_segments"]
             self._frontier_count = last["frontier_count"]
@@ -454,14 +451,12 @@ class CrawlEngine:
         except KeyError as e:
             raise ValueError(
                 f"{self.wh.rounds_path}: round record has no {e}") from None
-        if self._bloom_built and not all(
-                os.path.isdir(os.path.join(self.t_bloom.path, d))
-                for d, _ in segments):
+        if not all(os.path.isdir(os.path.join(self.t_bloom.path, d))
+                   for d, _ in segments):
             # segment data lost: a missing segment would mark its keys
             # definitely-new and bypass the exact anti-join — a mass
             # re-crawl. Fall back to exact-only dedup and empty the
             # stale table; the filter rebuilds at its engage threshold.
-            self._bloom_built = False
             self._bloom_synced_round = -1
             want["seen_bloom"] = segments = []
         self.bloom.segments = segments
@@ -734,7 +729,7 @@ class CrawlEngine:
             os.path.join(self.t_pages.path, rel))
 
         # -- WRITE 2: discovery + tagged state write -----------------------
-        cands = self._discover(round_df, crawled, rnd)
+        cands = self._discover(round_df, crawled)
 
         d_rows = deferred.select(*[f for f, _ in FRONTIER_FIELDS])
         if pm["n_limited"]:  # else no page of this round is retried
@@ -819,7 +814,7 @@ class CrawlEngine:
         # — no job — and so is dropping the filter segments whose
         # newest round expired with them.
         # _seen_count intentionally keeps the pre-expiry total: it only
-        # gates the pre-filter's engage threshold.
+        # gates the seen filter's engage threshold.
         if cfg.seen_ttl_rounds is not None:
             cutoff = rnd - cfg.seen_ttl_rounds
             expired_rel = [d for d, r in self._seen_rounds() if r <= cutoff]
@@ -832,11 +827,14 @@ class CrawlEngine:
         # since the last sync; with no such dir (no new URLs) it writes
         # nothing and launches no job. Past MAX_SEGMENTS live segments
         # the sync instead rebuilds one segment from the whole live seen
-        # table, which also sheds expired segments' stale keys.
-        build_due = not self._bloom_built and self._seen_count >= cfg.bloom_min_seen
+        # table, which also sheds expired segments' stale keys. The
+        # filter is engaged while it has live segments; with none (all
+        # expired, or a build over an empty seen table) the live seen
+        # table is the unsynced delta, so plain exact dedup is the same.
+        engaged = bool(self.bloom.segments)
+        build_due = not engaged and self._seen_count >= cfg.bloom_min_seen
         if build_due or (
-            self._bloom_built
-            and rnd - self._bloom_synced_round >= cfg.bloom_sync_rounds
+            engaged and rnd - self._bloom_synced_round >= cfg.bloom_sync_rounds
         ):
             live = self._seen_rounds()
             delta = [(d, r) for d, r in live if r > self._bloom_synced_round]
@@ -855,7 +853,6 @@ class CrawlEngine:
                     .select("url_hash"),
                     newest_round=max(r for _, r in delta),
                 )
-            self._bloom_built = True
             self._bloom_synced_round = rnd
 
         # -- metrics (driver-side pyarrow append — no Spark job) ------------
@@ -873,7 +870,6 @@ class CrawlEngine:
                 "frontier_count": self._frontier_count,
                 "min_depth": self._min_depth,
                 "min_host_budget": self._min_host_budget,
-                "bloom_built": self._bloom_built,
                 "bloom_synced_round": self._bloom_synced_round,
                 "bloom_segments": self.bloom.segments,
                 "adaptive_last_round": self._adaptive_last_round,
@@ -940,7 +936,7 @@ class CrawlEngine:
             "__ctx", "ltext", "ltitle"
         )
 
-    def _discover(self, round_df: DataFrame, crawled: int, rnd: int = 0) -> DataFrame | None:
+    def _discover(self, round_df: DataFrame, crawled: int) -> DataFrame | None:
         """link_discovery (bfs_strategy.py:68-140) as DataFrame ops.
         Pure plan construction — no jobs, no side effects; the caller's
         tagged state write materializes it exactly once."""
@@ -1006,27 +1002,28 @@ class CrawlEngine:
         if cfg.score_threshold != float("-inf"):
             cands = cands.where(F.col("score") >= cfg.score_threshold)
 
-        # seen dedup. With the filter engaged: "maybe seen" rows get the
-        # full exact anti-join; "definitely new" rows still anti-join the
-        # SMALL unsynced-rounds delta (the filter lags by <=
-        # bloom_sync_rounds rounds by design) — so dedup is exact every
-        # round while shard writes amortize.
-        # (url_hash already computed in the dedup agg's select above)
+        # seen dedup: one exact anti-join on url_hash (computed in the
+        # dedup agg's select above). With the filter engaged it narrows
+        # only the seen side, in one scan, to the rows a candidate may
+        # match: keys the probe reports maybe-seen, plus the rounds the
+        # filter has not synced yet (it lags by < bloom_sync_rounds
+        # rounds by design). A definitely-new candidate can then only
+        # match the unsynced delta; the filter has no false negatives,
+        # so dedup is exact every round while shard writes amortize.
         # rule (c): nothing was ever added to seen — no anti-join
         seen = self.t_seen.read(self.spark) if self._seen_count else None
-        if self._bloom_built and seen is not None:
-            probed = self.bloom.probe(self.spark, cands)
-            fresh = probed.where(~F.col("maybe_seen")).drop("maybe_seen")
-            maybe = probed.where(F.col("maybe_seen")).drop("maybe_seen")
-            maybe = maybe.join(seen.select("url_hash"), "url_hash", "left_anti")
-            if self._bloom_synced_round < rnd:
-                delta = seen.where(
-                    F.col("round") > self._bloom_synced_round
-                ).select("url_hash")
-                fresh = fresh.join(delta, "url_hash", "left_anti")
-            cands = fresh.unionByName(maybe)
-        elif seen is not None:
-            cands = cands.join(seen.select("url_hash"), "url_hash", "left_anti")
+        if seen is not None:
+            seen_keys = seen.select("url_hash")
+            if self.bloom.segments:
+                maybe = self.bloom.probe(self.spark, cands).where("maybe_seen")
+                seen_keys = (
+                    seen.select("url_hash", "round")
+                    .join(maybe, "url_hash", "left")
+                    .where(F.col("maybe_seen")
+                           | (F.col("round") > self._bloom_synced_round))
+                    .select("url_hash")
+                )
+            cands = cands.join(seen_keys, "url_hash", "left_anti")
 
         # capacity cap by score desc (bfs_strategy.py:124-131): an exact
         # global top-k (TakeOrdered) at every size; url_norm is unique

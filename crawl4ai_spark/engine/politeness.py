@@ -122,23 +122,6 @@ def select_fetch_batch(
             # multiplies those rows
             .distinct()
         )
-        if global_budget is not None:
-            # best-first batch cap (bff_strategy.py:161-174): global
-            # top-N over per-host selections (bypassed hosts' rows +
-            # contended hosts' winners), tie-break (priority, depth,
-            # url) per SURVEY §2.2 — sort-limit (TakeOrdered), never a
-            # partition-less window
-            pool_cols = list(dict.fromkeys([key, "eff_priority", "depth", "url_norm"]))
-            pool = f.where(F.col("__over").isNull()).select(*pool_cols).unionByName(
-                pruned.join(winners, key, "left_semi").select(*pool_cols)
-            )
-            winners = pool.orderBy(*order).limit(global_budget).select(key).distinct()
-            f = f.join(
-                winners.withColumn("__sel", F.lit(True)), key, "left"
-            ).withColumn(
-                "selected", F.coalesce(F.col("__sel"), F.lit(False))
-            ).drop("__sel", "__over")
-            return f
         # winners is Σ over-host budgets at most — orders of magnitude
         # smaller than the frontier; AQE broadcasts it when it fits
         f = f.join(
@@ -147,9 +130,12 @@ def select_fetch_batch(
             "selected",
             F.col("__over").isNull() | F.coalesce(F.col("__sel"), F.lit(False)),
         ).drop("__sel", "__over")
-        return f
 
     if global_budget is not None:
+        # best-first batch cap (bff_strategy.py:161-174): global top-N
+        # over the per-host selections, tie-break (priority, depth, url)
+        # per SURVEY §2.2 — sort-limit (TakeOrdered), never a
+        # partition-less window
         top = (
             f.where("selected").orderBy(*order).limit(global_budget)
             .select(F.col(key).alias("__top_key")).distinct()
@@ -167,7 +153,6 @@ def update_host_state(
     host_state: DataFrame | None,
     base_budget: int,
     max_budget: int | None = None,
-    spark=None,
 ) -> DataFrame:
     """Round-close recurrence on fetch statuses (async_dispatcher.py:65-85)."""
     max_budget = max_budget or base_budget

@@ -5,10 +5,11 @@ All shapes are chosen for 100 TB scale:
 
   exact       one groupBy on a 64-bit content hash — map-side partial
               aggregation, no row data shuffled beyond (hash, id).
-  minhash     signatures are computed per-row with higher-order array
-              functions (no shuffle); LSH banding turns the O(n^2)
-              pair problem into |bands| groupBy-joins on band keys, so
-              only same-bucket candidates shuffle.
+  minhash     signatures are built relationally: shingles explode once
+              and one groupBy takes every seeded min (map-side partial
+              combines); LSH banding turns the O(n^2) pair problem
+              into |bands| groupBy-joins on band keys, so only
+              same-bucket candidates shuffle.
   simhash     per-(doc, bit) relational aggregation; near-dup = equal
               fingerprint (or small hamming distance via band-joins).
   ngram-jaccard  exact verification path: (doc, shingle) self-join on
@@ -44,34 +45,15 @@ def exact_duplicates(df: DataFrame, text_col: str = "text",
     )
 
 
-def minhash_signature(text_col, num_hashes: int = 16, shingle_n: int = 3):
-    """MinHash signature as an array<long> column: for each seeded hash
-    family member, the min over word-shingle hashes. Computed entirely
-    inside one projection — no shuffle, no Python."""
-    shingles = F.array_distinct(word_ngrams(text_col, shingle_n))
-
-    def seeded(i):
-        # NB: must be a 1-arg lambda — a 2-arg lambda would be treated
-        # by Spark as an (element, index) higher-order function
-        return lambda s: hash64(s, seed=i)
-
-    return F.array(
-        *[
-            F.array_min(F.transform(shingles, seeded(i)))
-            for i in range(num_hashes)
-        ]
-    )
-
-
 def _relational_signatures(df: DataFrame, text_col: str, id_col: str,
                            num_hashes: int, shingle_n: int,
                            extra_cols: tuple[object, ...] = ()) -> DataFrame:
     """MinHash signatures built relationally: explode shingles once,
     then ``num_hashes`` vectorized min-aggregations in ONE groupBy
-    (map-side partial combines). The pure-expression form
-    (:func:`minhash_signature`) recomputes the shingle array per seed
-    inside nested HOFs, which falls out of whole-stage codegen —
-    ~20x slower at corpus scale.
+    (map-side partial combines). A per-row form with higher-order
+    array functions would recompute the shingle array per seed inside
+    nested lambdas, which falls out of whole-stage codegen — ~20x
+    slower at corpus scale.
 
     ``extra_cols`` are per-doc Columns (functionally dependent on the
     id, e.g. a content hash) carried through the groupBy as extra keys

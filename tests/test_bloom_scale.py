@@ -1,8 +1,8 @@
-"""The engine's URL-seen pre-filter engaging mid-crawl.
+"""The engine's URL-seen filter engaging mid-crawl.
 
 The filter is a cuckoo filter (engine/cuckoo.py); the engine still names
 its knobs and state after the earlier bloom backend (`bloom_min_seen`,
-`bloom_sync_rounds`, `eng.t_bloom`, `eng._bloom_built`). Its own sizing,
+`bloom_sync_rounds`, `eng.t_bloom`, `eng.bloom`). Its own sizing,
 FP budget and rebuild contracts live in test_cuckoo.py.
 """
 
@@ -40,9 +40,9 @@ def test_bloom_engages_mid_crawl(spark, tmp_path):
     # threshold 5: round 0 discovers >5 URLs -> the filter builds at
     # round 0's close and later rounds probe and sync it
     eng_mid, got_mid = crawl("mid", bloom_min_seen=5)
-    assert eng_mid._bloom_built
+    assert eng_mid.bloom.segments
     assert eng_mid._bloom_synced_round > 0  # synced after the build round
     assert eng_mid.t_bloom.read(spark).count() > 0
     eng_off, got_off = crawl("off", bloom_min_seen=EXACT_ONLY)
-    assert not eng_off._bloom_built
+    assert not eng_off.bloom.segments
     assert got_mid == got_off

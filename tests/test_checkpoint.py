@@ -39,7 +39,7 @@ CFG = dict(max_depth=3, base_host_budget=8, bloom_min_seen=2,
 # what resume reads, and all the record holds
 RECORD_KEYS = {
     "round", "pages_crawled", "seen_count", "frontier_count", "min_depth",
-    "min_host_budget", "bloom_built", "bloom_synced_round",
+    "min_host_budget", "bloom_synced_round",
     "bloom_segments", "adaptive_last_round", "tables",
 }
 

@@ -1,5 +1,5 @@
 """Cuckoo-filter seen-set (engine/cuckoo.py), the engine's URL-seen
-pre-filter (north rule: "bloom/cuckoo URL-seen").
+filter (north rule: "bloom/cuckoo URL-seen").
 
 Contract pinned here:
   - NO FALSE NEGATIVES, even past capacity: a failed eviction chain
@@ -16,9 +16,12 @@ Contract pinned here:
   - determinism: same deltas in the same order -> byte-identical blobs.
   - engine equivalence: a crawl whose filter lags the seen table by
     more than a round crawls exactly the set of a run synced every
-    round and of an exact-only run, and so does a run resumed from a
+    round and of an exact-only run, and so do a lagging run whose
+    probe reports every key maybe-seen and a run resumed from a
     checkpoint whose filter table is missing (the mid-crawl engage
     itself is test_bloom_scale.py).
+  - the probe takes keys, not rows: it returns (url_hash, maybe_seen)
+    whatever columns its input carries.
 """
 
 from __future__ import annotations
@@ -220,12 +223,55 @@ def test_cuckoo_engine_run_matches_bloom_and_exact(spark, tmp_path):
     a run synced every round and of an exact-only run."""
     eng_lag, got_lag = _crawl(spark, tmp_path / "lag",
                               _cfg(bloom_min_seen=5, bloom_sync_rounds=3))
-    assert eng_lag._bloom_built
+    assert eng_lag.bloom.segments
     assert eng_lag.t_bloom.read(spark).count() > 0
     _, got_sync = _crawl(spark, tmp_path / "sync", _cfg(bloom_min_seen=5))
     _, got_off = _crawl(spark, tmp_path / "off",
                         _cfg(bloom_min_seen=EXACT_ONLY))
     assert got_lag == got_sync == got_off
+
+
+def test_forced_false_positives_keep_the_crawl(spark, tmp_path, monkeypatch):
+    """A probe that reports every key maybe-seen narrows nothing: the
+    seen side of the anti-join is then the whole seen table, and a
+    lagging filter's crawl still equals the exact-only run."""
+    calls = []
+    real_probe = CuckooSeenSet.probe
+
+    def all_maybe(self, *a, **kw):
+        calls.append(1)
+        return real_probe(self, *a, **kw).withColumn("maybe_seen", F.lit(True))
+
+    monkeypatch.setattr(CuckooSeenSet, "probe", all_maybe)
+    eng, got = _crawl(spark, tmp_path / "fp",
+                      _cfg(bloom_min_seen=5, bloom_sync_rounds=3))
+    assert calls and eng.bloom.segments
+    monkeypatch.undo()
+    _, want = _crawl(spark, tmp_path / "off",
+                     _cfg(bloom_min_seen=EXACT_ONLY))
+    assert got == want
+
+
+def test_probe_returns_keys_only(spark, tmp_path):
+    """probe hands back (url_hash, maybe_seen), one row per input row,
+    whatever other columns the input carries, with or without
+    segments."""
+    c = CuckooSeenSet(SnapshotTable(str(tmp_path / "ck")), n_shards=4)
+    wide = _hashes(spark, 100, 100).select(
+        "url_hash",
+        F.col("url_hash").cast("string").alias("url_norm"),
+        F.lit("x" * 200).alias("html"),
+    )
+    want = sorted(r.url_hash for r in wide.collect())
+    for built in (False, True):
+        if built:
+            c.build(spark, _hashes(spark, 0, 200), newest_round=0)
+        out = c.probe(spark, wide)
+        assert out.columns == ["url_hash", "maybe_seen"]
+        rows = out.collect()
+        assert sorted(r.url_hash for r in rows) == want
+        # keys 100..199 are all built in: no false negative among them
+        assert {r.maybe_seen for r in rows} == {built}
 
 
 def test_engine_merges_past_max_segments(spark, tmp_path, monkeypatch):
@@ -271,8 +317,8 @@ def test_add_hashes_bootstraps_empty_table(spark, tmp_path):
 
 
 def test_resume_with_missing_filter_table(spark, tmp_path):
-    """A checkpoint that says the filter is built, resumed against a
-    missing filter table, must NOT trust the flag: an empty filter
+    """A checkpoint that lists filter segments, resumed against a
+    missing filter table, must NOT trust the list: an empty filter
     would mark every synced URL definitely-new and mass re-crawl. The
     guard falls back to exact-only dedup, so the crawled multiset
     equals a straight-through run's."""
@@ -284,7 +330,7 @@ def test_resume_with_missing_filter_table(spark, tmp_path):
 
     part, _ = _crawl(spark, tmp_path / "x",
                      dataclasses.replace(cfg, max_rounds=2))
-    assert part._bloom_built  # the checkpoint really says built
+    assert part.bloom.segments  # the checkpoint really lists segments
 
     shutil.rmtree(tmp_path / "x" / "seen_cuckoo")
     _, got = _crawl(spark, tmp_path / "x", cfg)

@@ -41,8 +41,8 @@ def plan_log(monkeypatch):
         log["budget"].append(kw["base_budget"])
         return select(*a, **kw)
 
-    def spy_discover(self, round_df, crawled, rnd=0):
-        out = discover(self, round_df, crawled, rnd)
+    def spy_discover(self, round_df, crawled):
+        out = discover(self, round_df, crawled)
         log["no_discovery"].append(out is None)
         return out
 

@@ -11,6 +11,7 @@ import contextlib
 import io
 import os
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -96,15 +97,62 @@ def main():
         fmt(apply_robots_gate(fr, robots)),
     ))
 
-    # 4. seen-set anti-join
-    seen = frontier.select(F.xxhash64("url_norm").alias("url_hash")).limit(100)
-    cands = frontier.select(F.xxhash64("url_norm").alias("url_hash"), "url_norm")
+    # 4. seen dedup as CrawlEngine._discover builds it once the seen
+    # filter is engaged: a parquet seen table of rounds 0-2 whose
+    # filter has synced rounds 0-1, the keys-only probe, one left join
+    # that keeps the seen rows of maybe-seen keys plus the unsynced
+    # round, and the one exact anti-join
+    from crawl4ai_spark.engine.cuckoo import CuckooSeenSet
+    from crawl4ai_spark.engine.tables import Warehouse
+
+    wh = Warehouse(tempfile.mkdtemp(prefix="c4as_plans_"))
+    seen_path = os.path.join(wh.root, "seen_rows")
+    frontier.where(F.pmod(F.hash("url_norm"), F.lit(2)) == 0).select(
+        F.xxhash64("url_norm").alias("url_hash"),
+        F.pmod(F.hash("url_norm", F.lit(1)), F.lit(3)).alias("round"),
+    ).write.parquet(seen_path)
+    seen = spark.read.parquet(seen_path)
+    synced = 1
+    bloom = CuckooSeenSet(wh.table("seen_cuckoo"), n_shards=4)
+    bloom.build(spark, seen.where(F.col("round") <= synced),
+                newest_round=synced)
+
+    def engaged_dedup():
+        cands = frontier.select(F.xxhash64("url_norm").alias("url_hash"),
+                                "url_norm")
+        maybe = bloom.probe(spark, cands).where("maybe_seen")
+        seen_keys = (
+            seen.select("url_hash", "round")
+            .join(maybe, "url_hash", "left")
+            .where(F.col("maybe_seen") | (F.col("round") > synced))
+            .select("url_hash")
+        )
+        return cands.join(seen_keys, "url_hash", "left_anti")
+
+    plans = []
+    for aqe in ("true", "false"):
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+        dedup = engaged_dedup()
+        dedup.collect()  # with AQE on, the plan shown is then the final one
+        plans.append(f"-- spark.sql.adaptive.enabled={aqe}\n" + fmt(dedup))
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
     sections.append((
-        "Seen-set exact anti-join (post-filter residue)",
-        "LeftAnti join; at this size broadcast, at 10^10 scale a shuffled "
-        "hash join whose left side the cuckoo pre-filter already shrank to "
-        "dups + false positives.",
-        fmt(cands.join(seen, "url_hash", "left_anti")),
+        "Seen-set exact anti-join (filter engaged)",
+        "One LeftAnti join of the candidates against a narrowed seen "
+        "side. The probe is a FlatMapCoGroupsInPandas whose candidate "
+        "input is the url_hash column alone (plus its shard id); the "
+        "shard blobs are the other cogroup side. The seen side is one "
+        "scan of the seen table, left-joined to the maybe-seen keys and "
+        "filtered to `maybe_seen OR round > synced`; the maybe-seen keys "
+        "are broadcast into that left join. With AQE on (rounds of at "
+        "least AQE_SMALL_ROUND_ROWS frontier rows) the initial anti-join "
+        "is a SortMergeJoin, because the static size of a left join over "
+        "the cogroup output is estimated as a product of its inputs; once "
+        "the shuffles have run, AQE sees the narrowed seen side's real "
+        "size and turns the anti-join into a broadcast. With AQE off (the "
+        "engine's smaller rounds) it stays a SortMergeJoin: the candidates "
+        "and the narrowed seen side both shuffle on url_hash.",
+        "\n\n".join(plans),
     ))
 
     # 5. cosine top-k: broadcast + partial TakeOrdered
@@ -134,13 +182,9 @@ def main():
     ))
 
     # 7. incremental adaptive-state maintenance (O(delta), not O(corpus))
-    import tempfile
-
     from crawl4ai_spark.engine.adaptive_state import AdaptiveState
-    from crawl4ai_spark.engine.tables import Warehouse
     from crawl4ai_spark.ops.text import tokens as _tokens
 
-    wh = Warehouse(tempfile.mkdtemp(prefix="c4as_plans_"))
     st = AdaptiveState(wh)
     base = d.select(
         F.col("doc_id").cast("string").alias("doc_id"),

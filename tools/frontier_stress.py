@@ -15,11 +15,10 @@ select_fetch_batch) survives it:
      the actual max rows any window partition sees — hub_rows/n_salts,
      NOT hub_rows;
   3. stage-2 sees at most budget*n_salts rows for the hub (measured);
-  4. selected counts are exact: hub == budget, tail == all;
-  5. seen filter: cuckoo build + probe over all N hashes; shard blobs
-     live in the shard table (executor-built via applyInPandas, never a
-     driver collect) — the report prints shard count/bytes and the
-     measured false-positive rate of a disjoint probe set.
+  4. selected counts are exact: hub == budget, tail == all.
+
+The seen filter's build, add, probe, FP/FN and TTL costs are measured
+by tools/seen_scale_stress.py.
 
 Usage:
   python tools/frontier_stress.py [N] [hub_pct] [budget] [n_salts] [cpus]
@@ -33,7 +32,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -74,9 +72,7 @@ def main() -> None:
     budget = int(sys.argv[3]) if len(sys.argv) > 3 else 2000
     n_salts = int(sys.argv[4]) if len(sys.argv) > 4 else 8
 
-    from crawl4ai_spark.engine.cuckoo import CuckooSeenSet
     from crawl4ai_spark.engine.politeness import select_fetch_batch
-    from crawl4ai_spark.engine.tables import Warehouse
     from crawl4ai_spark.session import build_session, host_cpus
 
     cpus = sys.argv[5] if len(sys.argv) > 5 else (
@@ -143,34 +139,6 @@ def main() -> None:
     report["plan_has_salted_window"] = (
         "host" in plan and plan.count("Window") >= 2
     )
-
-    # -- seen filter at the same scale ----------------------------------
-    wh = Warehouse(tempfile.mkdtemp(prefix="c4as_stress_"))
-    cuckoo = CuckooSeenSet(wh.table("seen_cuckoo"), n_shards=32)
-    t0 = time.monotonic()
-    cuckoo.build(spark, frontier.select("url_hash"), newest_round=0)
-    build_s = time.monotonic() - t0
-    shards = cuckoo.table.read(spark).select(
-        "shard_id",
-        (F.octet_length("table") + F.octet_length("stash")).alias("bytes"),
-        "n_items",
-    ).collect()
-    # disjoint probe set: ids shifted past n -> every hit is a false pos
-    probe = spark.range(n, n + 1_000_000).select(
-        F.xxhash64(F.format_string(
-            "https://probe%d.example.com/x/%d", F.col("id") % 7, F.col("id")
-        )).alias("url_hash"))
-    t0 = time.monotonic()
-    hits = cuckoo.probe(spark, probe).where("maybe_seen").count()
-    probe_s = time.monotonic() - t0
-    report.update({
-        "cuckoo_build_wall_s": round(build_s, 2),
-        "cuckoo_shards": len(shards),
-        "cuckoo_total_mb": round(sum(r.bytes for r in shards) / 2**20, 1),
-        "cuckoo_max_shard_mb": round(max(r.bytes for r in shards) / 2**20, 2),
-        "cuckoo_fp_rate": round(hits / 1_000_000, 6),
-        "cuckoo_probe_wall_s": round(probe_s, 2),
-    })
 
     frontier.unpersist()
     print(json.dumps(report))
