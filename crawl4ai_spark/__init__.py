@@ -23,3 +23,7 @@ Layout:
 """
 
 __version__ = "0.1.0"
+
+from crawl4ai_spark.zipreload import install_in_worker
+
+install_in_worker()

@@ -96,12 +96,16 @@ def prewarm(spark: SparkSession) -> None:
     The cold-round decomposition (BENCH.md round 5) shows a fresh
     JVM's first engine rounds run ~2.5x slower in EVERY phase —
     driver-side analysis/codegen JIT, whole-stage-codegen class
-    compilation, Python worker pool spinup, shuffle machinery, parquet
-    committer class loading — rather than one slow stage. This exercises each of those paths once at
-    trivial data volume (~2-4 s): a codegen aggregation over a
-    shuffle, an Arrow-batched pandas-UDF stage, and a parquet
-    round-trip. Idempotent; call it right after build_session on a
-    fresh cluster (bench.py does, disclosed in its JSON)."""
+    compilation, Python worker start-up, shuffle machinery, parquet
+    committer class loading — rather than one slow stage. This
+    exercises each of those paths once at trivial data volume
+    (~2-4 s): a codegen aggregation over a shuffle, an Arrow-batched
+    pandas-UDF stage with one task per default-parallelism slot, and a
+    parquet round-trip. The pandas stage runs a package function, so
+    each worker it starts imports the package and installs its
+    zip-reload hook (zipreload.py) before the first real round.
+    Idempotent; call it right after build_session on a fresh cluster
+    (bench.py does, disclosed in its JSON)."""
     if spark.conf.get("crawl4ai_spark.prewarmed", "no") == "yes":
         return
     from pyspark.sql import functions as F
@@ -113,13 +117,10 @@ def prewarm(spark: SparkSession) -> None:
     df.groupBy("k").agg(F.count(F.lit(1))).write.format("noop") \
         .mode("overwrite").save()
 
-    # Arrow + Python worker pool (the engine's fetch/extract path)
-    def _ident(it):
-        for pdf in it:
-            yield pdf
-
-    df.limit(1_000).mapInPandas(_ident, df.schema).write.format("noop") \
-        .mode("overwrite").save()
+    # Arrow + Python workers (the engine's fetch/extract path)
+    n = spark.sparkContext.defaultParallelism
+    spark.range(0, 1_000 * n, 1, n).mapInPandas(_ident, "id long") \
+        .write.format("noop").mode("overwrite").save()
 
     # parquet write+scan (committer + footer reader class loading)
     d = tempfile.mkdtemp(prefix="c4as_prewarm_")
@@ -127,6 +128,12 @@ def prewarm(spark: SparkSession) -> None:
     spark.read.parquet(d).write.format("noop").mode("overwrite").save()
     shutil.rmtree(d, ignore_errors=True)
     spark.conf.set("crawl4ai_spark.prewarmed", "yes")
+
+
+def _ident(batches):
+    """The prewarm pandas stage: pickled by reference, so the worker
+    imports this package to run it."""
+    yield from batches
 
 
 def _ship_package(spark: SparkSession) -> None:
